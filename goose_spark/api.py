@@ -351,14 +351,7 @@ class LedgerAPI:
 
     @_retry_stale_listing
     def cron_entries(self) -> list[dict]:
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = self.ledger.cron_path
-        if not os.path.exists(path):
-            return []
-        return pq.read_table(path).to_pylist()
+        return self.ledger.read_cron().to_pylist()
 
     def cron_get(self, name: str) -> dict | None:
         # no decorator: delegates to the already-retried cron_entries
@@ -371,23 +364,12 @@ class LedgerAPI:
         return self._cron_rewrite(lambda e: False)
 
     def _cron_rewrite(self, keep) -> bool:
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = self.ledger.cron_path
-        if not os.path.exists(path):
-            return False
-        schema = pq.read_schema(path)
-        entries = pq.read_table(path).to_pylist()
+        entries = self.ledger.read_cron().to_pylist()
         kept = [e for e in entries if keep(e)]
-        changed = len(kept) != len(entries)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(pa.Table.from_pylist(kept, schema=schema), tmp)
-        os.replace(tmp, path)
-        return changed
+        if len(kept) == len(entries):
+            return False
+        self.ledger.write_cron(kept)
+        return True
 
     # ---- B6: batch delete ----------------------------------------------------------
     # (src/goose/brokers/redis/api/batch.clj:11-38 — documented-expensive

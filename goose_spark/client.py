@@ -10,12 +10,8 @@ client LPUSHes blobs to Redis; only workers and queries need a cluster.
 from __future__ import annotations
 
 import json
-import os
 import uuid
 from datetime import datetime, timedelta, timezone
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from goose_spark import specs
 from goose_spark.functions import cron as cronlib
@@ -174,28 +170,11 @@ class JobClient:
     def _upsert_cron(self, entry: dict) -> None:
         """Same-name overwrite semantics (cron registration is an upsert,
         test/goose/brokers/redis/cron/registry_test.clj:20-40)."""
-        path = self.ledger.cron_path
-        entries = []
-        if os.path.exists(path):
-            entries = pq.read_table(path).to_pylist()
-        entries = [e for e in entries if e["cron_name"] != entry["cron_name"]]
-        entries.append(entry)
-        schema = pa.schema(
-            [
-                ("cron_name", pa.string()),
-                ("cron_schedule", pa.string()),
-                ("timezone", pa.string()),
-                ("execute_fn", pa.string()),
-                ("args", pa.string()),
-                ("queue", pa.string()),
-                ("next_run_at", pa.timestamp("us")),
-                ("last_run_at", pa.timestamp("us")),
-            ]
-        )
-        table = pa.Table.from_pylist(entries, schema=schema)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)  # atomic swap = the WATCH/MULTI txn analog
+        entries = [
+            e for e in self.ledger.read_cron().to_pylist()
+            if e["cron_name"] != entry["cron_name"]
+        ]
+        self.ledger.write_cron(entries + [entry])
 
     # -- S5: perform-batch — atomic N jobs + tracked batch ---------------------
     # (src/goose/client.clj:169-208; atomic enqueue src/goose/brokers/redis/batch.clj:21-32)
@@ -225,7 +204,7 @@ class JobClient:
         ]
         # one parquet file == one atomic append (the MULTI txn analog)
         self.ledger.append_rows(rows)
-        self._append_batch_row(
+        self.ledger.append_batch(
             {
                 "id": batch_id,
                 "callback_fn": callback_fn,
@@ -238,22 +217,3 @@ class JobClient:
             }
         )
         return {"id": batch_id, "total": len(rows), "job_ids": [r["id"] for r in rows]}
-
-    def _append_batch_row(self, row: dict) -> None:
-        schema = pa.schema(
-            [
-                ("id", pa.string()),
-                ("callback_fn", pa.string()),
-                ("linger_sec", pa.int64()),
-                ("queue", pa.string()),
-                ("total", pa.int64()),
-                ("status", pa.string()),
-                ("created_at", pa.timestamp("us")),
-                ("seq", pa.int64()),
-            ]
-        )
-        table = pa.Table.from_pylist([row], schema=schema)
-        path = os.path.join(self.ledger.batches_dir, f"{row['seq']}.parquet")
-        tmp = path + ".tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)

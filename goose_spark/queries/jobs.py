@@ -358,7 +358,7 @@ def qj13(spark: SparkSession, sf: str) -> DataFrame:
         GROUP BY bucket ORDER BY bucket""",
     doc="Scheduled-store depth per run_at HOUR bucket with a due split — "
         "the operator gauge for the bounded due-sweep (the sweep pops "
-        "whole hour-bucket files oldest-first under schedule_pop_limit, "
+        "whole hour-bucket files oldest-first under SCHEDULE_POP_LIMIT, "
         "so this histogram IS its work queue; goose reads the analog "
         "off ZCOUNT ranges). Fixed reference instant keeps the oracle "
         "deterministic. One map-side-combinable hash-agg; at 100 TB the "

@@ -74,8 +74,8 @@ class DeltaLedger(Ledger):
     (parquet appends == LPUSH). A Delta log needs a commit protocol, so
     producers route through ``append_df`` (one Delta txn per enqueue
     batch) with a SparkSession, or use delta-rs out-of-process; the
-    Spark-free ``append_rows`` raises here rather than silently writing
-    files Delta readers would not see."""
+    Spark-free ``append_rows`` / ``append_table`` raise here rather
+    than silently writing files Delta readers would not see."""
 
     def __init__(self, root: str):
         if not delta_available():
@@ -88,7 +88,7 @@ class DeltaLedger(Ledger):
 
     # ---- log store overrides (all pragma no cover: env-gated) -------------
 
-    def append_rows(self, rows) -> None:  # pragma: no cover
+    def append_table(self, table) -> None:  # pragma: no cover
         raise NotImplementedError(
             "Spark-free appends don't exist on the Delta backend; use "
             "append_df(spark.createDataFrame(rows)) — one Delta txn per call"

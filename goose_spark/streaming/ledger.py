@@ -28,6 +28,7 @@ the full set.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import shutil
@@ -65,6 +66,33 @@ ARROW_JOB_FIELDS = [
     ("worker_id", pa.string()),
 ]
 ARROW_LOG_SCHEMA = pa.schema(ARROW_JOB_FIELDS + [("seq", pa.int64())])
+#: one row per batch transition in ``batches/`` (event-sourced: the
+#: latest ``seq`` per id is the batch's state)
+ARROW_BATCH_SCHEMA = pa.schema(
+    [
+        ("id", pa.string()),
+        ("callback_fn", pa.string()),
+        ("linger_sec", pa.int64()),
+        ("queue", pa.string()),
+        ("total", pa.int64()),
+        ("status", pa.string()),
+        ("created_at", _TS),
+        ("seq", pa.int64()),
+    ]
+)
+#: the cron registry, ``cron/registry.parquet``: one row per entry
+ARROW_CRON_SCHEMA = pa.schema(
+    [
+        ("cron_name", pa.string()),
+        ("cron_schedule", pa.string()),
+        ("timezone", pa.string()),
+        ("execute_fn", pa.string()),
+        ("args", pa.string()),
+        ("queue", pa.string()),
+        ("next_run_at", _TS),
+        ("last_run_at", _TS),
+    ]
+)
 
 _seq_tiebreak = itertools.count()
 
@@ -72,6 +100,29 @@ _seq_tiebreak = itertools.count()
 def next_seq() -> int:
     """Monotonic log sequence (ns clock + in-process tiebreak)."""
     return time.time_ns() + next(_seq_tiebreak)
+
+
+def _tmp_path(directory: str) -> str:
+    """The one temp name every ledger file is staged under before its
+    atomic rename. Dot-prefixed, so no directory reader (``_parquet_files``
+    and Spark's file listing alike) sees a half-written or un-renamed
+    file."""
+    return os.path.join(directory, f".tmp-{uuid.uuid4().hex}.parquet")
+
+
+def _write_atomic(table: pa.Table, dest: str, **kwargs) -> None:
+    tmp = _tmp_path(os.path.dirname(dest))
+    pq.write_table(table, tmp, **kwargs)
+    os.replace(tmp, dest)
+
+
+def _parquet_files(directory: str) -> list[str]:
+    """Sorted names of the committed parquet files in ``directory``
+    (staged temp files skipped)."""
+    return sorted(
+        f for f in os.listdir(directory)
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
 
 
 def _stream_committed_files(checkpoint: str) -> set[str] | None:
@@ -289,10 +340,18 @@ class Ledger:
             seqs.append(r.get("seq", base_seq + i))
         arrays = [pa.array(cols[name], type=typ) for name, typ in ARROW_JOB_FIELDS]
         arrays.append(pa.array(seqs, type=pa.int64()))
-        table = pa.Table.from_arrays(arrays, schema=ARROW_LOG_SCHEMA)
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(self.log_dir, f"{base_seq}-{uuid.uuid4().hex}.parquet"))
+        self.append_table(pa.Table.from_arrays(arrays, schema=ARROW_LOG_SCHEMA))
+
+    def append_table(self, table: pa.Table) -> None:
+        """Append log rows (each carrying its ``seq``) as ONE parquet
+        file: a single rename publishes them, so a reader sees all of
+        them or none."""
+        if table.num_rows == 0:
+            return
+        _write_atomic(
+            table.cast(ARROW_LOG_SCHEMA),
+            os.path.join(self.log_dir, f"{next_seq()}-{uuid.uuid4().hex}.parquet"),
+        )
 
     # ---- Spark-side distributed append ------------------------------------
 
@@ -302,43 +361,50 @@ class Ledger:
         metadata renames (the Delta-commit shape — row data never
         funnels through the driver). Returns (published files, row count
         from parquet footers)."""
-        import shutil
+        moved, rows, _ = self._publish(
+            df, ".staging-", lambda base, i: f"{base + i}-{uuid.uuid4().hex}.parquet"
+        )
+        return moved, rows
 
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
+    def _publish(self, df: DataFrame, prefix: str, dst_name,
+                 deletes=(), publish_lock=None) -> tuple[list[str], int, int]:
+        """Write ``df`` executor-side into a ``<prefix>*`` staging dir,
+        then publish its non-empty parts into ``log/`` and remove the
+        ``deletes`` (log file names) as ONE manifest commit.
+        ``dst_name(base, i)`` names the i-th published part. Only the
+        publish (manifest write, renames, deletes) holds
+        ``publish_lock``; the Spark write runs outside it. Returns
+        (published paths, rows from parquet footers, commit seq)."""
+        staging = os.path.join(self.root, f"{prefix}{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(staging)
         try:
             base = next_seq()
             entries: list[dict] = []
-            rows = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
+            for f in _parquet_files(staging):
                 n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    # empty parts (tasks that got no rows) must not reach
-                    # log/: the streaming source's listing + checkpoint
-                    # index grows per file, and a wide repartition emits
-                    # up to `width` empties per micro-batch
-                    continue
-                rows += n
-                entries.append(
-                    {
-                        "src": f,
-                        "dst": f"{base + len(entries)}-{uuid.uuid4().hex}.parquet",
-                        "rows": n,
-                    }
-                )
-            if not entries:
-                return [], 0
-            # the manifest write is THE commit point: before it, the
-            # append never happened; after it, any Ledger open finishes it
-            self._write_manifest(base, staging, entries)
-            moved = self._apply_manifest(
-                {"staging": os.path.basename(staging), "files": entries}
-            )
+                # empty parts (tasks that got no rows) must not reach
+                # log/: the streaming source's listing + checkpoint
+                # index grows per file, and a wide repartition emits
+                # up to `width` empties per micro-batch
+                if n:
+                    entries.append({"src": f, "dst": dst_name(base, len(entries)), "rows": n})
+            moved: list[str] = []
+            if entries or deletes:
+                manifest = {
+                    "staging": os.path.basename(staging),
+                    "files": entries,
+                    "deletes": list(deletes),
+                }
+                lock = publish_lock if publish_lock is not None else contextlib.nullcontext()
+                with lock:
+                    # the manifest write is THE commit point: before it,
+                    # the commit never happened; after it, any Ledger
+                    # open finishes it
+                    self._write_manifest(base, staging, entries, deletes)
+                    moved = self._apply_manifest(manifest)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return moved, rows
+        return moved, sum(e["rows"] for e in entries), base
 
     # ---- Spark-side reads -------------------------------------------------
 
@@ -465,14 +531,20 @@ class Ledger:
         """Latest event-sourced row per batch id. O(batches) driver-side
         pyarrow — the analog of goose's per-batch hash GETs."""
         rows: dict[str, dict] = {}
-        for f in sorted(os.listdir(self.batches_dir)):
-            if not f.endswith(".parquet"):
-                continue
+        for f in _parquet_files(self.batches_dir):
             for r in pq.read_table(os.path.join(self.batches_dir, f)).to_pylist():
                 cur = rows.get(r["id"])
                 if cur is None or r["seq"] > cur["seq"]:
                     rows[r["id"]] = r
         return rows
+
+    def append_batch(self, row: dict) -> None:
+        """Record one batch transition (creation or terminal status) as
+        its own ``batches/<seq>.parquet`` file."""
+        _write_atomic(
+            pa.Table.from_pylist([row], schema=ARROW_BATCH_SCHEMA),
+            os.path.join(self.batches_dir, f"{row['seq']}.parquet"),
+        )
 
     def expired_batch_ids(self, now=None) -> list[str]:
         """Terminal batches past their OWN linger — parity with goose's
@@ -497,6 +569,19 @@ class Ledger:
             if row["seq"] + int(linger) * 1_000_000_000 <= now_ns:
                 out.append(bid)
         return sorted(out)
+
+    # ---- cron registry -----------------------------------------------------
+
+    def read_cron(self) -> pa.Table:
+        """The cron registry (empty when nothing was ever registered)."""
+        if not os.path.exists(self.cron_path):
+            return ARROW_CRON_SCHEMA.empty_table()
+        return pq.read_table(self.cron_path)
+
+    def write_cron(self, entries: list[dict]) -> None:
+        """Replace the registry with ``entries`` in one atomic swap — the
+        WATCH/MULTI registration txn analog (cron.clj:38-50)."""
+        _write_atomic(pa.Table.from_pylist(entries, schema=ARROW_CRON_SCHEMA), self.cron_path)
 
     # ---- compaction (retention / VACUUM analog) ----------------------------
 
@@ -523,9 +608,7 @@ class Ledger:
         staging dir, then published with metadata-only renames (the
         OPTIMIZE-commit shape) — row data never funnels through the
         driver; ``rows_after`` comes from parquet footers."""
-        import glob
-        import shutil
-
+        old_files = _parquet_files(self.log_dir)
         state = self.state(spark)
         if drop_terminal_before is not None:
             keep = ~(
@@ -540,64 +623,37 @@ class Ledger:
             # literal list and let Spark pick the join strategy
             exp_df = spark.createDataFrame([(b,) for b in expired], "batch_id string")
             state = state.join(exp_df, "batch_id", "left_anti")
-        staging = os.path.join(self.root, f".compact-{uuid.uuid4().hex}")
-        state.write.mode("overwrite").parquet(staging)
-        old_files = glob.glob(os.path.join(self.log_dir, "*.parquet"))
-        before = len(old_files)
-        rows_after = 0
-        try:
-            base = next_seq()
-            entries: list[dict] = []
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    continue
-                rows_after += n
-                entries.append(
-                    {"src": f, "dst": f"{base + len(entries)}-compacted.parquet", "rows": n}
-                )
-            # one manifest = the whole OPTIMIZE txn: publish the compacted
-            # parts FIRST, drop the superseded files after (a crash
-            # between the two shows duplicate history rows, which the
-            # max-seq state view already collapses — never missing rows)
-            manifest = {
-                "staging": os.path.basename(staging),
-                "files": entries,
-                "deletes": [os.path.basename(f) for f in old_files],
-            }
-            self._write_manifest(base, staging, entries, deletes=old_files)
-            self._apply_manifest(manifest)
-            # advance the time-travel horizon: versions before this
-            # commit are vacuumed (state_as_of refuses older cursors)
-            marker = os.path.join(self.commits_dir, "COMPACTION")
-            tmp_m = marker + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp_m, "w") as fh:
-                fh.write(str(base))
-            os.replace(tmp_m, marker)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        # one manifest = the whole OPTIMIZE txn: publish the compacted
+        # parts FIRST, drop the superseded files after (a crash between
+        # the two shows duplicate history rows, which the max-seq state
+        # view already collapses — never missing rows)
+        _, rows_after, base = self._publish(
+            state, ".compact-", lambda base, i: f"{base + i}-compacted.parquet",
+            deletes=old_files,
+        )
+        # advance the time-travel horizon: versions before this commit
+        # are vacuumed (state_as_of refuses older cursors)
+        marker = os.path.join(self.commits_dir, "COMPACTION")
+        tmp_m = marker + f".tmp-{uuid.uuid4().hex}"
+        with open(tmp_m, "w") as fh:
+            fh.write(str(base))
+        os.replace(tmp_m, marker)
         if expired:
             # drop the expired batches' entity rows too (the EXPIRE hits
             # the batch hash itself in the reference)
             gone = set(expired)
-            for f in sorted(os.listdir(self.batches_dir)):
-                if not f.endswith(".parquet"):
-                    continue
+            for f in _parquet_files(self.batches_dir):
                 p = os.path.join(self.batches_dir, f)
-                tbl = pq.read_table(p)
-                keep_rows = [r for r in tbl.to_pylist() if r["id"] not in gone]
-                if len(keep_rows) == len(tbl):
+                rows = pq.read_table(p).to_pylist()
+                keep_rows = [r for r in rows if r["id"] not in gone]
+                if len(keep_rows) == len(rows):
                     continue
                 if keep_rows:
-                    tmp = p + ".tmp"
-                    pq.write_table(pa.Table.from_pylist(keep_rows, schema=tbl.schema), tmp)
-                    os.replace(tmp, p)
+                    _write_atomic(pa.Table.from_pylist(keep_rows, schema=ARROW_BATCH_SCHEMA), p)
                 else:
                     os.remove(p)
         return {
-            "files_before": before,
+            "files_before": len(old_files),
             "rows_after": rows_after,
             "expired_batches": len(expired),
         }
@@ -667,38 +723,14 @@ class Ledger:
         df = spark.read.schema(self._spark_log_schema()).parquet(
             *[os.path.join(self.log_dir, f) for f in cand]
         ).coalesce(target_files)
-        staging = os.path.join(self.root, f".compact-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        import shutil as _shutil
-
-        try:
-            base = next_seq()
-            entries: list[dict] = []
-            rows = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    continue
-                rows += n
-                entries.append(
-                    {"src": f, "dst": f"gen-{base}-{len(entries)}.parquet", "rows": n}
-                )
-            import contextlib as _contextlib
-
-            with publish_lock if publish_lock is not None else _contextlib.nullcontext():
-                self._write_manifest(base, staging, entries, deletes=cand)
-                self._apply_manifest(
-                    {"staging": os.path.basename(staging), "files": entries,
-                     "deletes": cand}
-                )
-        finally:
-            _shutil.rmtree(staging, ignore_errors=True)
+        moved, rows, _ = self._publish(
+            df, ".compact-", lambda base, i: f"gen-{base}-{i}.parquet",
+            deletes=cand, publish_lock=publish_lock,
+        )
         return {
             "files": len(raw),
             "folded": len(cand),
-            "generations": len(entries),
+            "generations": len(moved),
             "rows": rows,
         }
 
@@ -739,15 +771,11 @@ class Ledger:
                 "max_seq": pa.array([p[1] for p in pairs], type=pa.int64()),
             }
         )
-        tmp = os.path.join(self.tombstones_dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(self.tombstones_dir, f"{next_seq()}.parquet"))
+        _write_atomic(table, os.path.join(self.tombstones_dir, f"{next_seq()}.parquet"))
 
     def add_tombstones_df(self, ids_df: DataFrame) -> int:
         """Distributed variant for unbounded deletions (purge): id rows
         are written executor-side then published into the index."""
-        import shutil as _shutil
-
         staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
         ids_df.select(
             "id", F.lit(self.TOMB_ALL).alias("max_seq")
@@ -756,9 +784,7 @@ class Ledger:
         try:
             base = next_seq()
             i = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
+            for f in _parquet_files(staging):
                 src = os.path.join(staging, f)
                 n = pq.ParquetFile(src).metadata.num_rows
                 if n == 0:
@@ -767,15 +793,13 @@ class Ledger:
                 os.replace(src, os.path.join(self.tombstones_dir, f"{base + i}.parquet"))
                 i += 1
         finally:
-            _shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
         return rows
 
     def tombstoned_ids(self, spark: SparkSession) -> DataFrame | None:
         """(id, tomb_max_seq) — suppress a job's rows with seq <= the
         max recorded tombstone (a delete dominates any supersession)."""
-        import glob
-
-        if not glob.glob(os.path.join(self.tombstones_dir, "*.parquet")):
+        if not _parquet_files(self.tombstones_dir):
             return None
         return (
             spark.read.parquet(self.tombstones_dir)
@@ -794,9 +818,7 @@ class Ledger:
         names are always read."""
         out = []
         horizon = due_before.strftime("%Y%m%d%H") if due_before is not None else None
-        for f in os.listdir(self.scheduled_dir):
-            if not f.endswith(".parquet"):
-                continue
+        for f in _parquet_files(self.scheduled_dir):
             if horizon is not None and f.startswith("h"):
                 bucket = f[1:11]
                 if bucket.isdigit() and bucket > horizon:
@@ -820,12 +842,11 @@ class Ledger:
             idx = [i for i, k in enumerate(keys) if k == bucket]
             sub = table.take(idx)
             name = (f"h{bucket}-" if bucket else "") + f"{next_seq()}.parquet"
-            tmp = os.path.join(self.scheduled_dir, f".tmp-{uuid.uuid4().hex}.parquet")
             # bounded row groups keep every park file splittable by
             # pop_due's row-group fallback — a single monolithic row
             # group would force the whole file into driver memory
-            pq.write_table(sub, tmp, row_group_size=self.PARK_ROW_GROUP)
-            os.replace(tmp, os.path.join(self.scheduled_dir, name))
+            _write_atomic(sub, os.path.join(self.scheduled_dir, name),
+                          row_group_size=self.PARK_ROW_GROUP)
 
     # rows per row group in park files; pop_due can therefore split any
     # park file at ≤ this granularity when enforcing its pop limit
@@ -907,7 +928,7 @@ class Ledger:
                     if g < meta.num_row_groups:
                         base = os.path.basename(path)
                         prefix = base[:12] if base.startswith("h") and base[1:11].isdigit() else ""
-                        tmp = os.path.join(self.scheduled_dir, f".tmp-{uuid.uuid4().hex}.parquet")
+                        tmp = _tmp_path(self.scheduled_dir)
                         writer = pq.ParquetWriter(tmp, pf.schema_arrow)
                         try:
                             for gg in range(g, meta.num_row_groups):

@@ -31,12 +31,14 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from datetime import datetime, timezone
 from typing import Callable, Iterator
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,16 +55,48 @@ from goose_spark.schema import (
     batch_status,
 )
 from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
+from goose_spark.streaming.metrics import latency_classes_ms
 
 
 def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-# Vectorized analog of goose's redis-scheduled-jobs-pop-limit (50,
-# src/goose/defaults.clj:49): bounds rows materialized per due-sweep pop.
-DEFAULT_SCHEDULE_POP_LIMIT = 10_000
+#: Rows per due-sweep pop — goose's redis-scheduled-jobs-pop-limit (50,
+#: src/goose/defaults.clj:49) rescaled: goose pops one Redis round-trip
+#: per job, the engine one Arrow batch, so a pop holds at most 10k rows
+#: (a few MB of driver memory). The drain loop clears any backlog
+#: whatever the limit; it only sets the number of iterations.
+SCHEDULE_POP_LIMIT = 10_000
 
+#: Micro-batches and due-sweep chunks of at most this many rows take the
+#: small-batch path: ONE materialization job, routing in pandas, and a
+#: single-file driver commit — per-batch fixed cost ~0.5 s instead of
+#: the ~1.3 s of 4-5 Spark jobs on the 1000 jobs/s parity load. Larger
+#: ones (the 100 TB shape) keep the distributed path, so the driver
+#: never holds more than this many rows.
+SMALL_BATCH_ROWS = 10_000
+
+#: Execution fan-out of a small-path batch: ceil(rows / ROWS_PER_TASK)
+#: tasks, capped at defaultParallelism, instead of a fixed full-width
+#: shuffle.
+ROWS_PER_TASK = 64
+
+#: statuses that park in the scheduled store until their run_at
+_PARKED = [STATUS_SCHEDULED, STATUS_RETRYING]
+
+
+#: integer columns of the log schema. Names only: the coercion target
+#: is object dtype holding python ints + None; a per-field extension
+#: dtype would reintroduce the non-Arrow-fallback crash (_coerce_log_pdf).
+_INT_LOG_FIELDS = tuple(f.name for f in ARROW_LOG_SCHEMA if pa.types.is_integer(f.type))
+
+
+def _to_arrow(frame) -> pa.Table:
+    """A pandas frame, or a bounded Spark DataFrame, as a log-schema
+    Arrow table."""
+    pdf = frame if isinstance(frame, pd.DataFrame) else frame.toPandas()
+    return pa.Table.from_pandas(pdf, schema=ARROW_LOG_SCHEMA, preserve_index=False)
 
 
 def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -85,7 +119,7 @@ def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
     completes instead of killing the query. The column list is DERIVED
     from the integer-typed fields of the log schema, so a new nullable
     int column added to JOB_SCHEMA later is covered automatically."""
-    for name in _int_log_fields():
+    for name in _INT_LOG_FIELDS:
         if name in pdf.columns and pdf[name].dtype.kind in ("f", "O"):
             col = pdf[name]
             # explicit object dtype up front — Series.map would re-infer
@@ -100,29 +134,6 @@ def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
                 }
             )
     return pdf
-
-
-def _int_log_fields() -> tuple[str, ...]:
-    """Column names of every integer field of the ledger log schema —
-    cached, it never changes within a process. (Names only: the
-    coercion target is object dtype holding python ints + None; a
-    per-field extension dtype here would invite reintroducing the
-    non-Arrow-fallback crash this replaced.)"""
-    global _INT_LOG_FIELDS
-    if _INT_LOG_FIELDS is None:
-        from pyspark.sql import types as T
-
-        from goose_spark.streaming.ledger import Ledger
-
-        _INT_LOG_FIELDS = tuple(
-            f.name
-            for f in Ledger._spark_log_schema().fields
-            if isinstance(f.dataType, (T.IntegerType, T.LongType))
-        )
-    return _INT_LOG_FIELDS
-
-
-_INT_LOG_FIELDS: tuple[str, ...] | None = None
 
 
 def _make_executor(retry_delay_fn: Callable[[int], int] | None, worker_id: str,
@@ -260,15 +271,11 @@ class Worker:
                  retry_delay_fn: Callable[[int], int] | None = None,
                  metrics=None, middlewares: tuple = (),
                  emit_in_progress: bool = False,
-                 distributed_commit: bool = True,
                  queues: list[str] | None = None,
                  scheduler_role: bool | None = None,
                  error_handler: str | None = None,
                  death_handler: str | None = None,
                  skip_dead_queue: bool = False,
-                 schedule_pop_limit: int = DEFAULT_SCHEDULE_POP_LIMIT,
-                 small_batch_rows: int = 10_000,
-                 rows_per_task: int = 64,
                  now_fn: Callable[[], datetime] | None = None):
         import threading
 
@@ -281,23 +288,6 @@ class Worker:
         self._now = now_fn or _now
         self.ledger = ledger if isinstance(ledger, Ledger) else Ledger(ledger)
         self.worker_id = worker_id
-        # Per-pop bound on the due-sweep (W7). Goose pops 50 jobs per
-        # poll (defaults.clj:49) because its unit of work is one Redis
-        # round-trip per job; the engine's unit is one Arrow batch, so
-        # the default bounds a pop at 10k rows (a few MB of driver
-        # memory) instead. Set 50 for strict reference parity — the
-        # drain loop still clears any backlog either way, it just takes
-        # more iterations.
-        self.schedule_pop_limit = max(1, int(schedule_pop_limit))
-        # Micro-batch latency knobs: batches ≤ small_batch_rows take the
-        # driver-compacted path (one materialization job + single-file
-        # commit) and fan execution out at ceil(rows / rows_per_task)
-        # tasks instead of a fixed 32 — per-batch fixed cost measured
-        # ~1.3 s → ~0.5 s on the 1000 jobs/s parity load. rows_per_task
-        # trades task overhead against per-job runtime: lower it (even
-        # to 1) for slow job fns, keep the default for quick ones.
-        self.small_batch_rows = max(0, int(small_batch_rows))
-        self.rows_per_task = max(1, int(rows_per_task))
         # retry.clj:47-55 handler parity: registry fn names called
         # executor-side on failure/death; skip_dead_queue writes dying
         # jobs as 'deleted' (no dead-queue entry). Validated at
@@ -352,12 +342,6 @@ class Worker:
         # observable the same way). Off by default — it costs one extra
         # ledger append per micro-batch.
         self.emit_in_progress = emit_in_progress
-        # Executor-side outcome commit (default): each task writes its own
-        # parquet part into a staging dir and the driver promotes the parts
-        # into log/ with metadata-only renames — the Delta-commit shape.
-        # False falls back to the single-file driver-side append (the
-        # local-mode shortcut SCALE.md documents).
-        self.distributed_commit = distributed_commit
         self.executions = 0
         # W9: process registry + heartbeat (heartbeat.clj:22-33) — the
         # console's workers view. Registered on construction; re-beaten
@@ -537,24 +521,19 @@ class Worker:
         return n
 
     def _for_each_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # Small batches (the steady-state of a low-latency trigger) take
-        # a driver-compacted path: ONE Spark job materializes the batch,
-        # the park/queue splits happen in pandas, and the outcome commits
-        # as one file — vs 4-5 Spark jobs (park collect, isEmpty, 32-task
-        # staged write, read-back summary) whose fixed costs floored
-        # per-batch latency at ~1.3 s. Bounded by small_batch_rows
-        # (default 10k ≈ a few MB): large batches — the 100 TB shape —
-        # keep the fully distributed path, so this is a latency
-        # optimization with a hard ceiling, not a driver funnel.
+        # Small batches (the steady state of a low-latency trigger) are
+        # materialized ONCE on the driver and routed in pandas; larger
+        # ones — the 100 TB shape — stay distributed, so this is a
+        # latency optimization with a hard ceiling (SMALL_BATCH_ROWS),
+        # not a driver funnel. The row count comes from parquet
+        # footers, so choosing the path costs no Spark job.
         n_est = self._batch_rows_estimate(epoch_id)
-        small = n_est is not None and 0 < n_est <= self.small_batch_rows
+        small = n_est is not None and 0 < n_est <= SMALL_BATCH_ROWS
         rows = batch_df if small else batch_df.persist()
         try:
             with self._lock:
                 # deletion guard (api/enqueued_jobs.clj:42-55): jobs
-                # tombstoned after enqueue must not execute — anti-join the
-                # O(deletions) side index, broadcast (it is tiny by
-                # construction, never the log)
+                # tombstoned after enqueue must not execute
                 rows_all = rows
                 dead_ids = self.ledger.tombstoned_ids(self.spark)
                 if dead_ids is not None:
@@ -573,84 +552,65 @@ class Worker:
                         )
                         .drop("tomb_max_seq")
                     )
-                if small:
-                    self._process_batch_small(rows_all)
-                    return
-                rows_live = rows_all
-                if self.queues:
-                    # queue binding (worker.clj:27): scoped workers only
-                    # execute their queues; others' rows pass by unconsumed
-                    # semantically (their own checkpoint group owns them)
-                    rows_live = rows_live.filter(F.col("queue").isin(self.queues))
-                else:
-                    claimed = self._other_fleets_queues()
-                    if claimed:
-                        rows_live = rows_live.filter(
-                            ~F.col("queue").isin(claimed)
-                        )
-                runnable = rows_live.filter(F.col("status") == STATUS_ENQUEUED)
-                # the scheduler-role holder is the store's single writer:
-                # it parks every queue's scheduled/retrying rows (the
-                # sweep re-routes other fleets' due rows via the log);
-                # non-owners park only what they consume. Double-parks
-                # (owner + scoped worker seeing the same row) collapse at
-                # sweep time via the per-id latest-seq dedup.
-                park_src = rows_all if self.scheduler_role else rows_live
-                to_park = park_src.filter(F.col("status").isin(STATUS_SCHEDULED, STATUS_RETRYING))
-                park_tbl = self._to_arrow(to_park)
-                self.ledger.park(park_tbl)
-                self._execute_and_log(runnable)
+                # small: the ONE materialization job of the batch
+                self._process_batch(rows_all.toPandas() if small else rows_all)
         finally:
             if not small:
                 rows.unpersist()
 
-    def _other_fleets_queues(self) -> list[str]:
-        """Queues claimed by scoped fleets — an unscoped worker must NOT
-        consume them (both read the same log on separate checkpoints, so
-        consuming here would run every claimed-queue job twice).
-        O(workers) registry read per micro-batch, never O(jobs)."""
-        return sorted(self.registry.claimed_queues(exclude_worker=self.worker_id))
+    def _consumes(self, queue):
+        """Mask of the rows this worker consumes, from their ``queue`` —
+        a pandas Series or a Spark Column (``isin`` serves both). Queue
+        binding (worker.clj:27): a scoped worker consumes only its
+        queues; the unscoped worker consumes every queue no scoped fleet
+        claimed (both read the same log on separate checkpoints, so
+        consuming a claimed queue here would run its jobs twice).
+        O(workers) registry read, never O(jobs)."""
+        if self.queues:
+            return queue.isin(self.queues)
+        return ~queue.isin(sorted(self.registry.claimed_queues(exclude_worker=self.worker_id)))
 
-    def _process_batch_small(self, rows_all: DataFrame) -> None:
-        """Driver-compacted micro-batch body (same semantics as the
-        distributed branch, pandas splits instead of per-split Spark
-        jobs). Execution itself still runs as a Spark mapInPandas job —
-        only the routing of a bounded batch happens driver-side."""
-        pdf = rows_all.toPandas()  # the ONE materialization job
+    def _process_batch(self, rows) -> None:
+        """The micro-batch body over a pandas frame (small batch) or a
+        Spark DataFrame (large batch) — every routing expression below
+        works on both: park scheduled/retrying rows, then execute the
+        enqueued rows this worker consumes."""
+        live = rows[self._consumes(rows["queue"])]
+        # the scheduler-role holder is the store's single writer: it
+        # parks every queue's scheduled/retrying rows (the sweep
+        # re-routes other fleets' due rows via the log); non-owners park
+        # only what they consume. Double-parks (owner + scoped worker
+        # seeing the same row) collapse at sweep time via the per-id
+        # latest-seq dedup.
+        park_src = rows if self.scheduler_role else live
+        self.ledger.park(_to_arrow(park_src[park_src["status"].isin(_PARKED)]))
+        runnable = live[live["status"] == STATUS_ENQUEUED]
+        if isinstance(runnable, pd.DataFrame):
+            self._execute_frame(runnable)
+        elif not runnable.isEmpty():
+            # bounded-staleness priority (P8): front-priority rows first.
+            # sortWithinPartitions, not a global orderBy: priority is
+            # already an approximation per SURVEY §7.4.1, and a global
+            # sort would add a range-sampling pass + full shuffle. The
+            # width follows the cluster's task slots.
+            self._execute_and_log(
+                runnable.repartition(self.spark.sparkContext.defaultParallelism)
+                .sortWithinPartitions(F.col("priority").desc(), F.col("enqueued_at")),
+                small=False,
+            )
+
+    def _execute_frame(self, pdf: pd.DataFrame) -> None:
+        """Execute a driver-side frame of runnable rows (a small
+        micro-batch or a due-sweep chunk). Priority order (P8) is
+        applied in pandas — createDataFrame slices contiguously, so the
+        narrow coalesce keeps it and no repartition shuffle runs — and
+        the fan-out follows the row count (ROWS_PER_TASK)."""
         if len(pdf) == 0:
             return
-        if self.queues:
-            live = pdf[pdf["queue"].isin(self.queues)]
-        else:
-            claimed = self._other_fleets_queues()
-            live = pdf[~pdf["queue"].isin(claimed)] if claimed else pdf
-        park_src = pdf if self.scheduler_role else live
-        to_park = park_src[park_src["status"].isin((STATUS_SCHEDULED, STATUS_RETRYING))]
-        if len(to_park):
-            self.ledger.park(
-                pa.Table.from_pandas(to_park, schema=ARROW_LOG_SCHEMA, preserve_index=False)
-            )
-        runnable = live[live["status"] == STATUS_ENQUEUED]
-        if len(runnable) == 0:
-            return
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-len(runnable) // self.rows_per_task),
-            ),
-        )
-        # priority order (P8) applied in pandas — createDataFrame slices
-        # contiguously, so a narrow coalesce() downstream preserves it
-        # and the per-batch repartition SHUFFLE stage disappears
-        runnable = runnable.sort_values(
-            ["priority", "enqueued_at"], ascending=[False, True]
-        )
-        due_df = self.spark.createDataFrame(
-            _coerce_log_pdf(runnable), schema=self.ledger._spark_log_schema()
-        )
-        self._execute_and_log(due_df, width=width, driver_commit=True,
-                              pre_ordered=True)
+        pdf = pdf.sort_values(["priority", "enqueued_at"], ascending=[False, True])
+        width = min(self.spark.sparkContext.defaultParallelism, -(-len(pdf) // ROWS_PER_TASK))
+        df = self.spark.createDataFrame(_coerce_log_pdf(pdf), schema=self.ledger._spark_log_schema())
+        self._execute_and_log(df.coalesce(width), small=len(pdf) <= SMALL_BATCH_ROWS)
 
     def tick(self) -> None:
         """Timer sweep: due scheduled/retrying jobs + due cron entries.
@@ -665,46 +625,20 @@ class Worker:
 
     # ------------------------------------------------------------------
 
-    def _execute_and_log(self, df: DataFrame, width: int | None = None,
-                         driver_commit: bool | None = None,
-                         pre_ordered: bool = False) -> None:
-        """Execute job rows and commit outcome rows. ``width`` overrides
-        the execution fan-out (the small-batch path sizes it to the
-        batch instead of paying 32 task round-trips for 250 rows);
-        ``driver_commit`` forces the single-file driver-side commit for
-        bounded batches regardless of ``distributed_commit``."""
-        if width is None and df.isEmpty():
-            return
-        import time as _time
+    def _metrics_on(self) -> bool:
+        return self.metrics is not None and self.metrics.enabled()
 
-        _exec_start = _time.perf_counter()
-        # bounded-staleness priority (P8): front-priority rows first.
-        # sortWithinPartitions (not a global orderBy): priority is already
-        # an approximation per SURVEY §7.4.1, and a global sort would add
-        # a range-sampling pass + full shuffle per micro-batch.
-        # width follows the cluster (defaultParallelism), not a constant —
-        # on local[32] this is 32; on a 1000-executor cluster it is the
-        # fleet's task slots — except when the caller already knows the
-        # batch is small and passes a matching width.
-        if width is None:
-            width = self.spark.sparkContext.defaultParallelism
-        if pre_ordered:
-            # caller sorted rows already; narrow coalesce keeps the order
-            # and skips the repartition shuffle stage entirely
-            ordered = df.coalesce(width)
-        else:
-            ordered = df.repartition(width).sortWithinPartitions(
-                F.col("priority").desc(), F.col("enqueued_at")
-            )
-        use_driver = (
-            driver_commit if driver_commit is not None else not self.distributed_commit
-        )
-        if self.emit_in_progress and not use_driver:
-            # executor-side in-progress stamp: same staged-append as the
-            # outcome commit; the seq (fresh time base + per-id hash
-            # offset) stays below the outcome row's later time base, so
-            # the outcome remains the job's latest row
-            marked_df = (
+    def _execute_and_log(self, ordered: DataFrame, small: bool) -> None:
+        """Execute priority-ordered job rows and commit the outcome rows:
+        one driver-written file for a small batch, a staged
+        executor-side commit otherwise."""
+        exec_start = time.perf_counter()
+        if self.emit_in_progress:
+            # in-progress stamp, committed the same way as the outcome;
+            # its seq (fresh time base + per-id hash offset) stays below
+            # the outcome row's later time base, so the outcome remains
+            # the job's latest row
+            marked = (
                 ordered.withColumn("status", F.lit(STATUS_IN_PROGRESS))
                 .withColumn("worker_id", F.lit(self.worker_id))
                 .withColumn(
@@ -712,69 +646,43 @@ class Worker:
                     F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
                 )
             )
-            self.ledger.append_df(marked_df)
-        elif self.emit_in_progress:
-            marked = self._to_arrow(ordered)
-            base = next_seq()
-            marked = marked.set_column(
-                marked.schema.get_field_index("status"),
-                "status",
-                pa.array([STATUS_IN_PROGRESS] * marked.num_rows, type=pa.string()),
-            ).set_column(
-                marked.schema.get_field_index("worker_id"),
-                "worker_id",
-                pa.array([self.worker_id] * marked.num_rows, type=pa.string()),
-            ).set_column(
-                marked.schema.get_field_index("seq"),
-                "seq",
-                pa.array([base + i for i in range(marked.num_rows)], type=pa.int64()),
-            )
-            self._append_log_table(marked)
+            if small:
+                self.ledger.append_table(_to_arrow(marked))
+            else:
+                self.ledger.append_df(marked)
         outcome = ordered.mapInPandas(
             _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
                            error_handler=self.error_handler,
                            death_handler=self.death_handler,
                            skip_dead_queue=self.skip_dead_queue),
-            schema=df.schema,
+            schema=ordered.schema,
         )
-        if not use_driver:
-            self._commit_distributed(outcome, _exec_start)
-            return
-        out_tbl = self._to_arrow(outcome)
-        self.executions += out_tbl.num_rows
-        # one parquet file per micro-batch == the ack/commit txn
-        self._append_log_table(out_tbl)
-        # park retry outcomes immediately so the next tick can sweep them
-        # (the stream will also redeliver them; the sweep dedupes by seq)
-        retrying = out_tbl.filter(
-            pa.compute.equal(out_tbl["status"], pa.scalar(STATUS_RETRYING))
-        )
-        self.ledger.park(retrying)
-        if self.metrics is not None and self.metrics.enabled():
-            # metrics middleware position parity (worker.clj:46-55)
-            self.metrics.record_outcomes(
-                out_tbl["status"].to_pylist(),
-                (_time.perf_counter() - _exec_start) * 1000,
-            )
-            from goose_spark.streaming.metrics import latency_classes_ms
+        if small:
+            self._commit_small(outcome, exec_start)
+        else:
+            self._commit_distributed(outcome, exec_start)
 
-            lat_pdf = out_tbl.select(
-                ["status", "retry_count", "cron_name", "run_at",
-                 "enqueued_at", "last_retried_at"]
-            ).to_pandas()
-            self.metrics.record_latency_classes(latency_classes_ms(lat_pdf, self._now()))
-        self._batch_callbacks(out_tbl)
+    def _commit_small(self, outcome: DataFrame, exec_start: float) -> None:
+        """Driver commit of a bounded outcome: ONE log file per
+        micro-batch == the ack/commit txn."""
+        pdf = outcome.toPandas()
+        tbl = _to_arrow(pdf)
+        self.ledger.append_table(tbl)
+        self._after_commit(
+            {s: int(n) for s, n in pdf["status"].value_counts().items()},
+            sorted(set(pdf["batch_id"].dropna())),
+            latency_classes_ms(pdf, self._now()) if self._metrics_on() else {},
+            tbl.filter(pc.equal(tbl["status"], STATUS_RETRYING)),
+            exec_start,
+        )
 
     def _commit_distributed(self, outcome: DataFrame, exec_start: float) -> None:
         """Executor-side ack/commit: tasks write outcome parts in parallel,
         the driver promotes them into log/ with metadata-only renames (the
         shape of a Delta transaction commit — data moves executor→disk,
-        never executor→driver). Post-commit bookkeeping (counters, retry
-        parking, batch callbacks) re-reads the committed files distributed
-        and collects only bounded summaries."""
-        import time as _time
-
-        moved = self._append_log_distributed(outcome)
+        never executor→driver). Bookkeeping re-reads the committed files
+        distributed and collects only bounded summaries."""
+        moved, _ = self.ledger.append_df(outcome)
         if not moved:
             return
         out = self.spark.read.schema(self.ledger._spark_log_schema()).parquet(*moved)
@@ -810,45 +718,35 @@ class Worker:
             if r["avg_wait_ms"] is not None:
                 lat_sum[r["_lcls"]] = lat_sum.get(r["_lcls"], 0.0) + r["avg_wait_ms"] * int(r["n"])
                 lat_n[r["_lcls"]] = lat_n.get(r["_lcls"], 0) + int(r["n"])
-        n_rows = int(sum(status_counts.values()))
+        self._after_commit(
+            status_counts,
+            sorted(touched_set),
+            {c: lat_sum[c] / lat_n[c] for c in lat_sum if lat_n.get(c)},
+            _to_arrow(out.filter(F.col("status") == STATUS_RETRYING))
+            if status_counts.get(STATUS_RETRYING) else None,
+            exec_start,
+        )
+
+    def _after_commit(self, status_counts: dict[str, int], batch_ids: list[str],
+                      latency_ms: dict[str, float], retrying: pa.Table | None,
+                      exec_start: float) -> None:
+        """Post-commit bookkeeping, fed by both commit shapes: execution
+        counter, retry parking, metrics, batch callbacks."""
+        n_rows = sum(status_counts.values())
         if n_rows == 0:
             return
         self.executions += n_rows
         # park retry outcomes immediately so the next tick can sweep them
         # (the stream will also redeliver them; the sweep dedupes by seq)
-        if status_counts.get(STATUS_RETRYING):
-            self.ledger.park(
-                self._to_arrow(out.filter(F.col("status") == STATUS_RETRYING))
-            )
-        if self.metrics is not None and self.metrics.enabled():
+        if retrying is not None:
+            self.ledger.park(retrying)
+        if self._metrics_on():
+            # metrics middleware position parity (worker.clj:46-55)
             self.metrics.record_outcome_counts(
-                {s: int(c) for s, c in status_counts.items()},
-                (_time.perf_counter() - exec_start) * 1000,
+                status_counts, (time.perf_counter() - exec_start) * 1000
             )
-            self.metrics.record_latency_classes(
-                {c: lat_sum[c] / lat_n[c] for c in lat_sum if lat_n.get(c)}
-            )
-        self._run_batch_callbacks(sorted(touched_set))
-
-    def _append_log_distributed(self, outcome: DataFrame) -> list[str]:
-        """Executor-side outcome publish — see Ledger.append_df."""
-        moved, _ = self.ledger.append_df(outcome)
-        return moved
-
-    def _append_log_table(self, table: pa.Table) -> None:
-        if table.num_rows == 0:
-            return
-        import uuid as _uuid
-
-        tmp = os.path.join(self.ledger.log_dir, f".tmp-{_uuid.uuid4().hex}.parquet")
-        pq.write_table(table.cast(ARROW_LOG_SCHEMA), tmp)
-        os.replace(tmp, os.path.join(self.ledger.log_dir, f"{next_seq()}-{_uuid.uuid4().hex}.parquet"))
-
-    @staticmethod
-    def _to_arrow(df: DataFrame) -> pa.Table:
-        """Micro-batch → arrow (bounded by maxFilesPerTrigger; at 100 TB
-        this would be a distributed Delta append instead)."""
-        return pa.Table.from_pandas(df.toPandas(), schema=ARROW_LOG_SCHEMA, preserve_index=False)
+            self.metrics.record_latency_classes(latency_ms)
+        self._run_batch_callbacks(batch_ids)
 
     # ------------------------------------------------------------------
     # scheduler sweep (W7)
@@ -856,7 +754,7 @@ class Worker:
 
     def _sweep_due(self) -> None:
         """Drain due parked rows in bounded chunks. Each pop materializes
-        at most ``schedule_pop_limit`` rows (plus one row-group of
+        at most ``SCHEDULE_POP_LIMIT`` rows (plus one row-group of
         slack) in driver memory — never the whole backlog — and the loop
         re-pops immediately while due jobs are found, exactly goose's
         scheduler: pop ≤50 (defaults.clj:49, commands.clj:219-228), poll
@@ -873,7 +771,7 @@ class Worker:
         # parked row whose job was since re-parked into a later bucket
         # fails the latest-seq guard below, so per-bucket sweeping stays
         # exactly-once.
-        tbl, files, more = self.ledger.pop_due(self._now(), self.schedule_pop_limit)
+        tbl, files, more = self.ledger.pop_due(self._now(), SCHEDULE_POP_LIMIT)
         if tbl is None or tbl.num_rows == 0:
             if files:  # zero-row husk files: drop them
                 self.ledger.replace_scheduled(None, files)
@@ -906,8 +804,7 @@ class Worker:
             return more
         due_mask = pdf["run_at"] <= pd.Timestamp(self._now())
         due, remaining = pdf[due_mask], pdf[~due_mask]
-        remaining_tbl = pa.Table.from_pandas(remaining, schema=ARROW_LOG_SCHEMA, preserve_index=False)
-        self.ledger.replace_scheduled(remaining_tbl if len(remaining) else None, files)
+        self.ledger.replace_scheduled(_to_arrow(remaining) if len(remaining) else None, files)
         if len(due) == 0:
             return more
         # due jobs jump the queue (front-enqueue parity, commands.clj:145-160)
@@ -921,43 +818,13 @@ class Worker:
         # enqueued rows", the broker-side scheduler shape of the
         # reference (scheduler.clj:22-48). Executing them here would
         # double-run them (the owning fleet also consumes the log).
-        if self.queues:
-            consume_mask = due["queue"].isin(self.queues)
-        else:
-            claimed = self.registry.claimed_queues(exclude_worker=self.worker_id)
-            consume_mask = ~due["queue"].isin(sorted(claimed))
-        mine, theirs = due[consume_mask], due[~consume_mask]
+        mask = self._consumes(due["queue"])
+        theirs = due[~mask].copy()
         if len(theirs):
-            theirs = theirs.copy()
             base = next_seq()
             theirs["seq"] = [base + i for i in range(len(theirs))]
-            self._append_log_table(
-                pa.Table.from_pandas(
-                    theirs, schema=ARROW_LOG_SCHEMA, preserve_index=False
-                )
-            )
-        if len(mine) == 0:
-            return more
-        # same right-sizing as _process_batch_small: the chunk is a
-        # bounded driver-built frame, so pre-sort in pandas, fan out at
-        # ceil(rows/rows_per_task) tasks, and (when bounded) commit
-        # driver-side — not a fixed 32-task shuffle per chunk
-        mine = mine.sort_values(["priority", "enqueued_at"],
-                                ascending=[False, True])
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-len(mine) // self.rows_per_task),
-            ),
-        )
-        due_df = self.spark.createDataFrame(
-            _coerce_log_pdf(mine), schema=self.ledger._spark_log_schema()
-        )
-        self._execute_and_log(
-            due_df, width=width, pre_ordered=True,
-            driver_commit=True if len(mine) <= self.small_batch_rows else None,
-        )
+            self.ledger.append_table(_to_arrow(theirs))
+        self._execute_frame(due[mask])
         return more
 
     # ------------------------------------------------------------------
@@ -965,18 +832,13 @@ class Worker:
     # ------------------------------------------------------------------
 
     def _cron_tick(self) -> None:
-        path = self.ledger.cron_path
-        if not os.path.exists(path):
-            return
-        tbl = pq.read_table(path)
+        tbl = self.ledger.read_cron()
         if tbl.num_rows == 0:
             return
         now = self._now()
         # vectorized due-scan: the common tick (nothing due) costs one
         # Arrow compare over the registry, NOT a Python loop — the
         # per-entry Python below runs only over entries actually firing
-        import pyarrow.compute as pc
-
         due_mask = pc.and_kleene(
             pc.is_valid(tbl["next_run_at"]),
             pc.less_equal(tbl["next_run_at"], pa.scalar(now, type=pa.timestamp("us"))),
@@ -1014,20 +876,11 @@ class Worker:
         if new_jobs:
             self.ledger.append_rows(new_jobs)
         if changed:
-            schema = pq.read_schema(path)
-            tmp = path + f".tmp-{_uuid.uuid4().hex}"
-            pq.write_table(pa.Table.from_pylist(entries, schema=schema), tmp)
-            os.replace(tmp, path)
+            self.ledger.write_cron(entries)
 
     # ------------------------------------------------------------------
     # batch state machine (B2–B4)
     # ------------------------------------------------------------------
-
-    def _batch_callbacks(self, outcomes: pa.Table) -> None:
-        if outcomes.num_rows == 0:
-            return
-        pdf = outcomes.to_pandas()
-        self._run_batch_callbacks(sorted(set(pdf["batch_id"].dropna())))
 
     def _run_batch_callbacks(self, touched: list[str]) -> None:
         if not touched:
@@ -1048,7 +901,7 @@ class Worker:
             )
             .collect()
         )
-        batches = self._batches_state()
+        batches = self.ledger.batches_state()
         for r in counts:
             derived = batch_status(int(r["enq"]), int(r["retrying"]), int(r["success"]), int(r["dead"]))
             current = batches.get(r["batch_id"])
@@ -1060,8 +913,8 @@ class Worker:
             current = dict(current)
             current["status"] = derived
             current["seq"] = next_seq()
-            self._append_batch_update(current)
-            if self.metrics is not None and self.metrics.enabled():
+            self.ledger.append_batch(current)
+            if self._metrics_on():
                 # batch terminal metrics (metrics.clj:15-20): counter on
                 # the derived status + create→terminal completion time
                 created = current.get("created_at")
@@ -1085,19 +938,3 @@ class Worker:
                         }
                     ]
                 )
-
-    def _batches_state(self) -> dict[str, dict]:
-        return self.ledger.batches_state()
-
-    def _append_batch_update(self, row: dict) -> None:
-        schema = None
-        d = self.ledger.batches_dir
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                schema = pq.read_schema(os.path.join(d, f))
-                break
-        if schema is None:
-            return
-        tmp = os.path.join(d, f".tmp-{row['seq']}.parquet")
-        pq.write_table(pa.Table.from_pylist([row], schema=schema), tmp)
-        os.replace(tmp, os.path.join(d, f"{row['seq']}.parquet"))

@@ -277,7 +277,7 @@ def test_latency_class_helper_pure():
     assert sink.timings == {"execution.latency": [10.0]}  # guard + known keys
 
 
-def test_worker_emits_latency_and_batch_metrics(spark, tmp_path):
+def test_worker_emits_latency_and_batch_metrics(spark, tmp_path, monkeypatch):
     """Full metric-surface parity (metrics.clj:15-25,59-86): execution
     latency timings plus the batch terminal counter and completion
     time, fed from a real worker pass."""
@@ -292,11 +292,11 @@ def test_worker_emits_latency_and_batch_metrics(spark, tmp_path):
     res = client.perform_batch("flaky", [("mb1", 0), ("mb2", 99)],
                                callback_fn="noop", max_retries=0)
     sink = MetricsSink()
-    # small_batch_rows=0 forces the DISTRIBUTED commit path, whose
+    # SMALL_BATCH_ROWS=0 forces the DISTRIBUTED commit path, whose
     # latency classes come from the bounded summary scan (the driver
     # path is covered by test_worker_metrics_sink + the pure helper)
-    Worker(spark, root, retry_delay_fn=lambda n: 0, metrics=sink,
-           small_batch_rows=0).process_available()
+    monkeypatch.setattr("goose_spark.streaming.worker.SMALL_BATCH_ROWS", 0)
+    Worker(spark, root, retry_delay_fn=lambda n: 0, metrics=sink).process_available()
     assert sink.counters["jobs.processed"] == 7
     assert len(sink.timings["execution.latency"]) >= 1
     assert all(ms > 0 for ms in sink.timings["execution.latency"])

@@ -16,12 +16,6 @@ from goose_spark.functions.registry import reset_flaky
 from goose_spark.streaming.ledger import Ledger
 from goose_spark.streaming.worker import Worker
 
-# excluded from the DEFAULT pytest run (pytest.ini deselects
-# 'slowsuite' so 'python -m pytest tests/ -x -q' completes inside
-# the grading driver's window — r15 directive 5); tools/partest.py
-# and 'pytest -m ""' still run it
-pytestmark = pytest.mark.slowsuite
-
 
 def utcnow():
     return datetime.now(timezone.utc).replace(tzinfo=None)
@@ -160,7 +154,7 @@ def test_batch_success_callback(spark, ledger):
     callback = state.get(f"callback-{res['id']}")
     assert callback is not None and callback["status"] == "success"
     assert json.loads(callback["args"]) == [res["id"], "success"]
-    batches = worker._batches_state()
+    batches = worker.ledger.batches_state()
     assert batches[res["id"]]["status"] == "success"
     # callback emitted exactly once even after more passes
     worker.process_available()
@@ -174,7 +168,7 @@ def test_batch_partial_success(spark, ledger):
                                callback_fn="noop", queue="batch-q", max_retries=0)
     worker = Worker(spark, ledger, rand_int=lambda n: 0)
     worker.process_available()
-    batches = worker._batches_state()
+    batches = worker.ledger.batches_state()
     assert batches[res["id"]]["status"] == "partial-success"
 
 
@@ -192,7 +186,7 @@ def test_batch_member_death_respects_skip_dead_queue(spark, ledger):
     api = LedgerAPI(spark, ledger)
     assert api.peek_dead(5) == []                       # off dead surfaces
     assert api.dashboard_counts().get("dead", 0) == 0
-    batches = worker._batches_state()
+    batches = worker.ledger.batches_state()
     assert batches[res["id"]]["status"] == "partial-success"  # death counted
 
 
@@ -552,7 +546,7 @@ def test_per_batch_linger_compaction(spark, ledger):
     assert ledger.compact(spark)["expired_batches"] == 0
 
 
-def test_crash_recovery_replays_unacked_batch(spark, ledger):
+def test_crash_recovery_replays_unacked_batch(spark, ledger, monkeypatch):
     """W10 orphan recovery, exercised not just designed (mirrors
     test/goose/brokers/redis/integration_test.clj:67-86): a worker dies
     mid-commit — executor parts staged, the publishing rename never
@@ -564,11 +558,11 @@ def test_crash_recovery_replays_unacked_batch(spark, ledger):
     for i in range(5):
         client.perform_async("noop", i)
 
-    # small_batch_rows=0 pins the STAGED (distributed) commit path —
+    # SMALL_BATCH_ROWS=0 pins the STAGED (distributed) commit path —
     # this test exercises its torn-staging recovery specifically; the
     # small-batch driver commit has its own crash test below
-    w1 = Worker(spark, ledger, worker_id="w-crash", rand_int=lambda n: 0,
-                small_batch_rows=0)
+    monkeypatch.setattr("goose_spark.streaming.worker.SMALL_BATCH_ROWS", 0)
+    w1 = Worker(spark, ledger, worker_id="w-crash", rand_int=lambda n: 0)
     orig_append = ledger.append_df
 
     def dying_append(df):
@@ -618,17 +612,17 @@ def test_crash_recovery_small_batch_path(spark, ledger):
         client.perform_async("noop", i)
 
     w1 = Worker(spark, ledger, worker_id="w-crash-s", rand_int=lambda n: 0)
-    orig = Worker._append_log_table
+    orig = Ledger.append_table
 
     def dying_append(self, table):
         raise RuntimeError("simulated crash before driver-commit rename")
 
-    Worker._append_log_table = dying_append
+    Ledger.append_table = dying_append
     try:
         with pytest.raises(Exception):
             w1.process_available()
     finally:
-        Worker._append_log_table = orig
+        Ledger.append_table = orig
 
     assert counts(spark, ledger) == {"enqueued": 5}  # nothing published
     w2 = Worker(spark, ledger, worker_id="w-recovered-s", rand_int=lambda n: 0)
@@ -638,18 +632,18 @@ def test_crash_recovery_small_batch_path(spark, ledger):
 
 
 def test_small_batch_routing(spark, ledger, monkeypatch):
-    """Micro-batches at or under small_batch_rows take the driver-
+    """Micro-batches at or under SMALL_BATCH_ROWS take the driver-
     compacted path; bigger ones keep the fully distributed path. The
     row estimate comes from the streaming source log + parquet footers
     (no Spark job)."""
     calls = []
-    orig = Worker._process_batch_small
+    orig = Worker._execute_frame
 
-    def spy(self, rows_all):
+    def spy(self, pdf):
         calls.append(True)
-        return orig(self, rows_all)
+        return orig(self, pdf)
 
-    monkeypatch.setattr(Worker, "_process_batch_small", spy)
+    monkeypatch.setattr(Worker, "_execute_frame", spy)
 
     client = JobClient(ledger)
     for i in range(20):
@@ -661,8 +655,8 @@ def test_small_batch_routing(spark, ledger, monkeypatch):
     calls.clear()
     for i in range(20):
         client.perform_async("noop", 100 + i)
-    Worker(spark, ledger, rand_int=lambda n: 0,
-           small_batch_rows=5).process_available()
+    monkeypatch.setattr("goose_spark.streaming.worker.SMALL_BATCH_ROWS", 5)
+    Worker(spark, ledger, rand_int=lambda n: 0).process_available()
     assert calls == []  # 20 rows > 5 → distributed path
     assert counts(spark, ledger) == {"success": 40}
 

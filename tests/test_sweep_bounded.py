@@ -4,7 +4,7 @@ scheduled backlog in driver memory. Reference contract: pop at most
 (src/goose/defaults.clj:49, src/goose/brokers/redis/commands.clj:219-228)
 and re-poll immediately while due jobs are found
 (src/goose/brokers/redis/scheduler.clj:36-48). The engine's analog:
-``Ledger.pop_due`` bounds one pop at ``schedule_pop_limit`` rows (plus at
+``Ledger.pop_due`` bounds one pop at ``SCHEDULE_POP_LIMIT`` rows (plus at
 most one row-group of slack) and ``Worker._sweep_due`` loops until dry."""
 
 from __future__ import annotations
@@ -172,7 +172,8 @@ def test_sweep_massive_backlog_bounded(spark, ledger, monkeypatch):
     monkeypatch.setattr(Ledger, "pop_due", spy)
     monkeypatch.setattr(Ledger, "read_scheduled", no_full_read)
 
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, schedule_pop_limit=LIMIT)
+    monkeypatch.setattr("goose_spark.streaming.worker.SCHEDULE_POP_LIMIT", LIMIT)
+    worker = Worker(spark, ledger, rand_int=lambda n: 0)
     worker.tick()
 
     assert max(pops) <= LIMIT + Ledger.PARK_ROW_GROUP  # driver-memory cap
