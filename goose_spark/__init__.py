@@ -9,9 +9,9 @@ library — see /root/reference) idiomatically on Spark:
 * a **Structured Streaming worker** with checkpoint recovery replaces
   goose's in-progress queues / heartbeats / orphan checker
   (``src/goose/brokers/redis/consumer.clj``, ``orphan_checker.clj``);
-* retry timers, cron ticks and batch completion are **stateful streaming
-  operators** (``src/goose/brokers/redis/retry.clj``, ``cron.clj``,
-  ``batch.clj``);
+* retry and schedule timers, cron ticks and batch completion run inside
+  the worker's one ``foreachBatch`` micro-batch and its timer tick
+  (``src/goose/brokers/redis/retry.clj``, ``cron.clj``, ``batch.clj``);
 * the console/API queries become plain DataFrame/SQL over the ledger
   (``src/goose/brokers/redis/console/data.clj``, ``src/goose/api/*``).
 

@@ -86,41 +86,11 @@ def _now() -> datetime:
 
 
 class LedgerAPI:
-    """``state_view`` (optional): a ``streaming.stateview.
-    MaterializedState`` maintained by the ledger's fold stream. When
-    given, every read resolves from the view's manifest — one pruned
-    file scan, no window-over-history shuffle (the O(1)-read form the
-    console wants at 100 TB). Contract: the view has ONE writer (its
-    maintenance stream); this API only APPENDS to the ledger, so a
-    mutation (prioritise / replay / delete / purge) surfaces in
-    view-backed reads after the next micro-batch fold. Mutations never
-    SELECT their victims from the view (``_mutation_state``): they
-    recompute from the ledger so repeated calls inside one fold
-    interval stay idempotent — dashboards and consoles at the view,
-    read-modify-write at the source of truth."""
-
-    def __init__(self, spark: SparkSession, ledger: Ledger | str,
-                 state_view=None):
+    def __init__(self, spark: SparkSession, ledger: Ledger | str):
         self.spark = spark
         self.ledger = ledger if isinstance(ledger, Ledger) else Ledger(ledger)
-        self.state_view = state_view
 
     def state(self) -> DataFrame:
-        if self.state_view is not None:
-            # manifest re-resolved per call (stateview.read's reader
-            # contract) — never hold this frame across maintenance commits
-            return self.state_view.read(self.spark)
-        return self.ledger.state(self.spark)
-
-    def _mutation_state(self) -> DataFrame:
-        """Victim selection for mutations (prioritise / replay / delete /
-        purge / pop) always recomputes from the LEDGER, bypassing the
-        view: the view lags by one fold interval, so picking victims
-        from it would let two ``replay_dead`` calls inside one interval
-        re-enqueue the same dead jobs twice, or ``prioritise_execution``
-        supersede a stale seq while a newer enqueued copy stays live.
-        Dashboards and consoles read the view; mutations read the
-        source of truth."""
         return self.ledger.state(self.spark)
 
     def state_as_of(self, seq: int | None = None, ts=None) -> DataFrame:
@@ -200,7 +170,7 @@ class LedgerAPI:
         """LREM+RPUSH / ZREM+RPUSH analog (commands.clj:145-164):
         re-emit as front-priority enqueued rows."""
         rows = (
-            self._mutation_state()
+            self.state()
             .filter(F.col("id").isin(job_ids) & F.col("status").isin(
                 STATUS_ENQUEUED, STATUS_SCHEDULED, STATUS_RETRYING))
             .collect()
@@ -228,7 +198,7 @@ class LedgerAPI:
         """Move n oldest dead jobs to the front of their ready queue
         (api/dead_jobs.clj:25-47)."""
         updates = []
-        for d in self._oldest_dead(self._mutation_state(), n):
+        for d in self._oldest_dead(self.state(), n):
             d.pop("seq", None)
             d.update(status=STATUS_ENQUEUED, priority=PRIORITY_FRONT,
                      died_at=None, run_at=None)
@@ -240,14 +210,15 @@ class LedgerAPI:
 
     def delete_jobs(self, job_ids: list[str]) -> int:
         """Delete specific jobs in any state (enqueued_jobs.clj:42-48,
-        scheduled_jobs.clj:36-37, dead_jobs.clj:49-50): tombstone the
-        state view AND record the ids in the deletion index so an
-        undelivered enqueue row never executes. Returns jobs found."""
-        rows = (
-            self._mutation_state()
-            .filter(F.col("id").isin(job_ids) & (F.col("status") != "deleted"))
-            .collect()  # bounded by the explicit id list
-        )
+        scheduled_jobs.clj:36-37, dead_jobs.clj:49-50). Returns jobs
+        found."""
+        return self._delete_where(
+            F.col("id").isin(job_ids) & (F.col("status") != "deleted"))
+
+    def _delete_where(self, cond) -> int:
+        """Tombstone the state view AND record the ids in the deletion
+        index so an undelivered enqueue row never executes."""
+        rows = self.state().filter(cond).collect()  # bounded by an id list or one batch
         updates = []
         for r in rows:
             d = r.asDict()
@@ -271,7 +242,7 @@ class LedgerAPI:
         if queue is not None:
             cond &= F.col("queue") == queue
         doomed = (
-            self._mutation_state()
+            self.state()
             .filter(cond)
             .withColumn("status", F.lit("deleted"))
             .withColumn(
@@ -289,7 +260,7 @@ class LedgerAPI:
     def pop_dead(self, n: int = 1) -> list[dict]:
         """ZPOPMIN analog (dead_jobs.clj:11-14): return + delete the n
         oldest dead jobs."""
-        jobs = self._oldest_dead(self._mutation_state(), n)
+        jobs = self._oldest_dead(self.state(), n)
         self.delete_jobs([j["id"] for j in jobs])
         return jobs
 
@@ -330,7 +301,7 @@ class LedgerAPI:
         from goose_spark.streaming.ledger import next_seq
 
         doomed = (
-            self._mutation_state()
+            self.state()
             .filter((F.col("status") == STATUS_DEAD) & (F.col("died_at") < F.lit(cutoff)))
             .withColumn("status", F.lit("deleted"))
             .withColumn(
@@ -376,22 +347,12 @@ class LedgerAPI:
     #  there; a single predicate tombstone here)
 
     def delete_batch(self, batch_id: str) -> int:
-        rows = (
-            self._mutation_state()
-            .filter(
-                (F.col("batch_id") == batch_id)
-                & F.col("status").isin(STATUS_ENQUEUED, STATUS_SCHEDULED, STATUS_RETRYING)
-            )
-            .collect()
+        """Delete the batch's live members the way ``delete_jobs`` does,
+        so none of them runs afterwards."""
+        return self._delete_where(
+            (F.col("batch_id") == batch_id)
+            & F.col("status").isin(STATUS_ENQUEUED, STATUS_SCHEDULED, STATUS_RETRYING)
         )
-        updates = []
-        for r in rows:
-            d = r.asDict()
-            d.pop("seq", None)
-            d.update(status="deleted")
-            updates.append(d)
-        self.ledger.append_rows(updates)
-        return len(updates)
 
     # ---- Q12/Q13: dashboard ----------------------------------------------------
 

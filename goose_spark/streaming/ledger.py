@@ -125,6 +125,18 @@ def _parquet_files(directory: str) -> list[str]:
     )
 
 
+def _latest_per_id(log: DataFrame) -> DataFrame:
+    """The one job-state rule: the max-seq row per id. The window
+    partitions by id, so an id predicate on the result still reaches
+    the scan."""
+    w = Window.partitionBy("id").orderBy(F.col("seq").desc())
+    return (
+        log.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def _stream_committed_files(checkpoint: str) -> set[str] | None:
     """Basenames of every source file a streaming query has COMMITTED
     (its exactly-once horizon): union of the checkpoint's source
@@ -432,13 +444,7 @@ class Ledger:
     def state(self, spark: SparkSession) -> DataFrame:
         """Current job state = max-seq row per id. At scale this is a
         materialized Delta MERGE target; here a window over the log."""
-        w = Window.partitionBy("id").orderBy(F.col("seq").desc())
-        return (
-            self.log(spark)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return _latest_per_id(self.log(spark))
 
     def mark(self) -> int:
         """An as-of cursor for time travel: every row appended after this
@@ -495,35 +501,13 @@ class Ledger:
                 f"as-of cursor {seq} predates the last compaction "
                 f"({floor}); that history is vacuumed"
             )
-        w = Window.partitionBy("id").orderBy(F.col("seq").desc())
-        return (
-            self.log(spark)
-            .filter(F.col("seq") <= F.lit(int(seq)))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return _latest_per_id(self.log(spark).filter(F.col("seq") <= F.lit(int(seq))))
 
     @staticmethod
     def _spark_log_schema():
         from pyspark.sql import types as T
 
         return T.StructType(JOB_SCHEMA.fields + [T.StructField("seq", T.LongType(), False)])
-
-    def snapshot(self, spark: SparkSession, dest: str) -> DataFrame:
-        """Materialize the current state view to ``dest``, partitioned by
-        status — the console/API read path at scale. Status is the most
-        selective console predicate (dead-jobs page, enqueued-per-queue
-        page, scheduler due-scan), so partitioning by it turns those
-        queries into partition-pruned scans that never touch the
-        success-row bulk. Returns a reader over the snapshot; assert
-        pruning via plans.inspect (PartitionFilters on status).
-
-        At 100 TB this is the nightly materialization of the Delta MERGE
-        target; `status` stays low-cardinality (6 values) so the
-        partition count is bounded regardless of job volume."""
-        self.state(spark).write.mode("overwrite").partitionBy("status").parquet(dest)
-        return spark.read.parquet(dest)
 
     # ---- batch entity reads ------------------------------------------------
 

@@ -75,3 +75,62 @@ def test_dead_and_batch_pages(spark, setup):
     assert batch["status"] == "success" and batch["counts"]["success"] == 4
     assert console.page_batch("nonexistent") is None
     assert console.page_scheduled()["total"] == 1
+
+
+def test_console_reads_and_replay_dead(spark, tmp_path):
+    """Every read surface the console uses (dashboard fan-out, queue
+    listing/sizes, finds, pagination, dead top-k) answers from the
+    ledger's state; ``replay_dead`` moves the oldest dead jobs to the
+    front of their queue and the next read sees it."""
+    from datetime import datetime, timezone
+
+    from goose_spark.schema import PRIORITY_FRONT
+    from goose_spark.streaming.ledger import Ledger
+
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+
+    def rows(ids, status, queue="default"):
+        return [
+            {"id": i, "queue": queue, "execute_fn": "noop", "args": "[]",
+             "status": status, "priority": 0, "enqueued_at": now,
+             "retry_count": 0, "max_retries": 27,
+             "error": "boom" if status == "dead" else None}
+            for i in ids
+        ]
+
+    ledger = Ledger(str(tmp_path / "ledger"))
+    ledger.append_rows(rows([f"a{i:02d}" for i in range(25)], "enqueued"))
+    ledger.append_rows(rows([f"d{i}" for i in range(6)], "dead"))
+    ledger.append_rows(rows(["m1", "m2", "m3"], "enqueued", queue="mail"))
+    ledger.append_rows(rows(["s1", "s2"], "scheduled"))
+    api = LedgerAPI(spark, ledger)
+    console = Console(api)
+
+    assert api.dashboard_counts() == {"enqueued": 28, "dead": 6, "scheduled": 2}
+    assert api.list_queues() == ["default", "mail"]
+    assert api.size("default") == 25
+    assert api.size(status="dead") == 6
+    assert api.find_by_id("a07")["status"] == "enqueued"
+    assert api.find_by_id("nope") is None
+    page2 = api.page("default", page=2)
+    assert [j["id"] for j in page2] == [f"a{i:02d}" for i in range(10, 20)]
+    assert [j["id"] for j in api.peek_dead(3)] == ["d0", "d1", "d2"]
+
+    home = console.page_home()
+    assert home["enqueued"] == 28 and home["dead"] == 6
+    assert home["scheduled"] == 2
+    p1 = console.page_enqueued("default", page=1)
+    assert p1["total"] == 25
+    assert [j["id"] for j in p1["jobs"]] == [j["id"] for j in api.page("default", page=1)]
+    dead = console.page_dead()
+    assert dead["total"] == 6
+    assert {j["id"] for j in dead["jobs"]} == {f"d{i}" for i in range(6)}
+
+    # replay appends to the ledger; the very next read sees it
+    assert api.replay_dead(2) == 2
+    assert api.size(status="dead") == 4
+    assert api.dashboard_counts() == {"enqueued": 30, "dead": 4, "scheduled": 2}
+    for jid in ("d0", "d1"):
+        job = api.find_by_id(jid)
+        assert job["status"] == "enqueued" and job["priority"] == PRIORITY_FRONT
+    assert [j["id"] for j in api.peek_dead(1)] == ["d2"]

@@ -106,9 +106,20 @@ def test_fold_touches_only_committed_files(spark, ledger):
 
 def test_fold_respects_every_listed_checkpoint(spark, ledger, tmp_path):
     """With a second (lagging) consumer listed, only the INTERSECTION of
-    committed files folds — a view stream that hasn't folded a file yet
+    committed files folds — a consumer that hasn't read a file yet
     keeps it on disk."""
-    from goose_spark.streaming.stateview import MaterializedState
+    seen: set[tuple[str, int]] = set()
+    other_ck = str(tmp_path / "other-ck")
+
+    def collect(df, _epoch):
+        seen.update((r["id"], r["seq"]) for r in df.select("id", "seq").collect())
+
+    def run_other():
+        (
+            ledger.log_stream(spark).writeStream.foreachBatch(collect)
+            .option("checkpointLocation", other_ck)
+            .trigger(availableNow=True).start().awaitTermination()
+        )
 
     client = JobClient(ledger)
     for i in range(12):
@@ -116,31 +127,28 @@ def test_fold_respects_every_listed_checkpoint(spark, ledger, tmp_path):
     worker = Worker(spark, ledger, rand_int=lambda n: 0)
     worker.process_available()
 
-    # view stream commits the first 12 files
-    view = MaterializedState(str(tmp_path / "view"))
-    view_ck = str(tmp_path / "view-ck")
-    view.attach_stream(ledger.log_stream(spark), view_ck).awaitTermination()
+    # the other consumer commits the first 12 jobs' files
+    run_other()
 
-    # worker consumes MORE than the view has seen
+    # worker consumes MORE than the other consumer has seen
     for i in range(12, 24):
         client.perform_async("noop", i)
     worker.process_available()
 
-    view_committed = _stream_committed_files(view_ck)
+    other_committed = _stream_committed_files(other_ck)
     before = set(_raw_files(ledger))
-    not_view_committed = {f for f in before if f not in view_committed}
-    assert not_view_committed  # precondition: the view genuinely lags
+    not_other_committed = {f for f in before if f not in other_committed}
+    assert not_other_committed  # precondition: the other consumer lags
 
-    stats = ledger.compact_log(spark, [worker.checkpoint_dir, view_ck],
+    stats = ledger.compact_log(spark, [worker.checkpoint_dir, other_ck],
                                min_files=1, keep_recent=0)
     assert stats["folded"] > 0
-    # nothing the view hasn't committed was folded away
-    assert not_view_committed <= set(_raw_files(ledger))
-    # the lagging view catches up losslessly and equals the ledger state
-    view.attach_stream(ledger.log_stream(spark), view_ck).awaitTermination()
-    vt = sorted((r["id"], r["status"], r["seq"]) for r in view.read(spark).collect())
-    lt = sorted((r["id"], r["status"], r["seq"]) for r in ledger.state(spark).collect())
-    assert vt == lt
+    # nothing the other consumer hasn't committed was folded away
+    assert not_other_committed <= set(_raw_files(ledger))
+    # the lagging consumer catches up losslessly: it has read every row
+    run_other()
+    log = {(r["id"], r["seq"]) for r in ledger.log(spark).select("id", "seq").collect()}
+    assert seen == log
 
 
 def test_time_travel_survives_fold(spark, ledger):

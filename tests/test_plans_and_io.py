@@ -203,31 +203,6 @@ def test_stream_load_requires_schema_and_runs(spark, tmp_path):
     assert spark.sql("SELECT count(*) n FROM io_stream").collect()[0]["n"] == src.count()
 
 
-def test_snapshot_partition_prunes_on_status(spark, tmp_path):
-    """The status-partitioned state snapshot must turn status predicates
-    into partition pruning (PartitionFilters), not data filters."""
-    from goose_spark.client import JobClient
-    from goose_spark.streaming.ledger import Ledger
-    from goose_spark.streaming.worker import Worker
-
-    root = str(tmp_path / "ledger")
-    client = JobClient(root)
-    for i in range(20):
-        client.perform_async("noop", i)
-    Worker(spark, root).process_available()
-
-    snap = Ledger(root).snapshot(spark, str(tmp_path / "snap"))
-    dead_page = snap.filter(snap.status == "dead")
-    r = report(dead_page)
-    assert "PartitionFilters: [isnotnull(status" in r.text or "status#" in "".join(
-        __import__("re").findall(r"PartitionFilters: \[[^\]]*\]", r.text)
-    ), r.text
-    # success rows exist, dead page is empty — and the scan read only the
-    # dead partition (no status data-filter remains)
-    assert dead_page.count() == 0
-    assert snap.filter(snap.status == "success").count() == 20
-
-
 def test_tfidf_topk_plan(spark):
     """tx5: per-lang top-k runs as WindowGroupLimit over the vocabulary
     aggregate, and the per-lang doc counts broadcast."""

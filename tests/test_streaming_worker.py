@@ -767,6 +767,21 @@ def test_delete_jobs_prevents_execution(spark, ledger):
     assert api.find_by_id(kept["id"])["status"] == "success"
 
 
+def test_delete_batch_members_never_execute(spark, ledger):
+    """Batch delete (api/batch.clj:11-38) tombstones every live member
+    the way delete_jobs does: none of them executes, all read deleted."""
+    client = JobClient(ledger)
+    res = client.perform_batch("noop", [(i,) for i in range(4)])
+    api = LedgerAPI(spark, ledger)
+    assert api.delete_batch(res["id"]) == 4
+
+    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker.process_available()
+    assert worker.executions == 0
+    assert {api.find_by_id(j)["status"] for j in res["job_ids"]} == {"deleted"}
+    assert api.dashboard_counts() == {"deleted": 4}
+
+
 def test_purge_queue(spark, ledger):
     """Queue purge (enqueued_jobs.clj:50-54): every enqueued job of the
     queue is deleted and never executes; other queues are untouched."""

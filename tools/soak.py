@@ -1,8 +1,8 @@
 """Streaming-core soak (round-9 directive #7; extended for round-11
 directives #4/#5): sustained continuous-trigger run with steady offered
 load and every stateful subsystem attached — cron tick, retries,
-dead-lettering, batch callbacks, scheduler due-sweep, materialized-
-state-view maintenance, and (new) the periodic generational log fold.
+dead-lettering, batch callbacks, scheduler due-sweep, and (new) the
+periodic generational log fold.
 
 What "passes" means: after the warm-up samples, RSS / checkpoint-bytes /
 per-trigger source-listing time are FLAT and the worker LAG (enqueued +
@@ -121,7 +121,6 @@ def main() -> None:
     from goose_spark.api import LedgerAPI
     from goose_spark.client import JobClient
     from goose_spark.session import get_spark
-    from goose_spark.streaming.stateview import MaterializedState
     from goose_spark.streaming.worker import Worker
 
     root = tempfile.mkdtemp(prefix="goose-soak-")
@@ -131,34 +130,26 @@ def main() -> None:
     client = JobClient(root)
     # cron fires every minute for the whole soak
     client.perform_every("soak-cron", "* * * * *", "noop", 0)
-    view = MaterializedState(os.path.join(root, "state-view"))
-    view_ck = os.path.join(root, "view-checkpoint")
 
     def start_worker():
         w = Worker(spark, root, retry_delay_fn=lambda n: 3)
-        h = w.start(
-            trigger_sec=0.25,
-            compact_log_every_sec=compact_every or None,
-            compact_checkpoints=[w.checkpoint_dir, view_ck],
-        )
+        h = w.start(trigger_sec=0.25, compact_log_every_sec=compact_every or None)
         return w, h
 
     worker, handle = start_worker()
-    ledger = worker.ledger
     log_dir = os.path.join(root, "log")
 
     print(f"# soak: {duration}s at {rate} jobs/s, stall={stall_sec}s, "
           f"fold-every={compact_every}s, ledger={root}")
-    print("| t_min | rss_mb | ckpt_mb | view_mb | log_mb | log_files "
+    print("| t_min | rss_mb | ckpt_mb | log_mb | log_files "
           "| list_ms | lag | enq | done |")
-    print("|---|---|---|---|---|---|---|---|---|---|", flush=True)
+    print("|---|---|---|---|---|---|---|---|---|", flush=True)
 
     samples = []
     start = time.time()
     enq = 0
     i = 0
     last_sample = start
-    last_view_fold = start
     api = LedgerAPI(spark, root)
     stall_at = start + duration / 2 if stall_sec else None
     stall_info: dict = {}
@@ -238,11 +229,6 @@ def main() -> None:
                 stall_at = None  # once
                 continue
 
-            if now - last_view_fold >= 15:  # incremental view maintenance
-                view.attach_stream(
-                    ledger.log_stream(spark), view_ck
-                ).awaitTermination()
-                last_view_fold = now
             # fail fast and loud if the streaming query died — a soak
             # that keeps producing against a dead consumer measures
             # nothing (and the exception would otherwise be lost)
@@ -265,9 +251,7 @@ def main() -> None:
                 s = {
                     "t_sec": round(now - start, 1),
                     "rss_mb": round(rss_mb(), 1),
-                    "ckpt_mb": round(du_mb(worker.checkpoint_dir)
-                                     + du_mb(view_ck), 2),
-                    "view_mb": round(du_mb(view.root), 2),
+                    "ckpt_mb": round(du_mb(worker.checkpoint_dir), 2),
                     "log_mb": round(du_mb(log_dir), 2),
                     "log_files": n_files,
                     "listing_ms": None if lm is None else round(lm, 1),
@@ -279,7 +263,7 @@ def main() -> None:
                 }
                 samples.append(s)
                 print(f"| {s['t_sec']/60:.1f} | {s['rss_mb']} "
-                      f"| {s['ckpt_mb']} | {s['view_mb']} | {s['log_mb']} "
+                      f"| {s['ckpt_mb']} | {s['log_mb']} "
                       f"| {s['log_files']} | {s['listing_ms']} | {s['lag']} "
                       f"| {s['enqueued']} | {s['success']} |", flush=True)
             sleep = 1.0 - (time.time() - sec_start)
@@ -290,7 +274,6 @@ def main() -> None:
 
     # drain whatever is left, then final accounting
     worker.run_loop(3, sleep_sec=2)
-    view.attach_stream(ledger.log_stream(spark), view_ck).awaitTermination()
     counts = api.dashboard_counts()
     summary = {
         "duration_sec": duration,
@@ -299,12 +282,7 @@ def main() -> None:
         "final_counts": counts,
         "stall": stall_info or None,
         "samples": samples,
-        "view_matches_state": None,
     }
-    # end-to-end invariant: the maintained view equals derived state
-    a = sorted((r["id"], r["status"]) for r in view.read(spark).collect())
-    b = sorted((r["id"], r["status"]) for r in ledger.state(spark).collect())
-    summary["view_matches_state"] = a == b
     print(json.dumps({k: v for k, v in summary.items() if k != "samples"}))
     if out_path:
         with open(out_path, "w") as fh:
