@@ -273,22 +273,16 @@ def main() -> None:
 
 def load_snapshot() -> dict:
     """Per-query seconds from the newest committed bench_history
-    snapshot — the reference scale for the outlier third attempt.
-    Empty dict (no retries ever fire) when no snapshot exists."""
-    import glob
-    import re
+    snapshot (``tools/bench_regression.py``'s pick) — the reference
+    scale for the outlier third attempt. Empty dict (no retries ever
+    fire) when no snapshot exists."""
+    from tools.bench_regression import newest_snapshot
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = glob.glob(os.path.join(here, "bench_history", "bench_full_r*.json"))
-
-    def rnum(p: str) -> int:
-        m = re.search(r"bench_full_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    if not paths:
-        return {}
     try:
-        with open(max(paths, key=rnum)) as fh:
+        path = newest_snapshot()
+        if path is None:
+            return {}
+        with open(path) as fh:
             data = json.load(fh)
         return {k: v for k, v in data.get("queries", {}).items()
                 if isinstance(v, (int, float)) and v > 0}

@@ -22,7 +22,7 @@ from goose_spark.schema import (
     STATUS_RETRYING,
     STATUS_SCHEDULED,
 )
-from goose_spark.streaming.ledger import Ledger
+from goose_spark.streaming.ledger import Ledger, transition_seq
 
 PAGE_SIZE = 10  # src/goose/defaults.clj:82
 
@@ -235,8 +235,6 @@ class LedgerAPI:
         with status overrides; ``queue=None`` spans all queues, the shape
         of the dead/scheduled zset purges). Tombstones are built
         executor-side — a purge can touch an unbounded set."""
-        from goose_spark.streaming.ledger import next_seq
-
         statuses = [status] if isinstance(status, str) else list(status)
         cond = F.col("status").isin(statuses)
         if queue is not None:
@@ -245,10 +243,7 @@ class LedgerAPI:
             self.state()
             .filter(cond)
             .withColumn("status", F.lit("deleted"))
-            .withColumn(
-                "seq",
-                F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
-            )
+            .withColumn("seq", transition_seq())
         ).persist()
         try:
             _, n = self.ledger.append_df(doomed)
@@ -294,20 +289,12 @@ class LedgerAPI:
         rows; physical removal is compaction/VACUUM.
 
         Tombstones are built and appended executor-side (a retention
-        sweep can touch an unbounded dead set — never collect it). The
-        per-row seq only needs to exceed the job's previous seq, so a
-        fresh time base + per-id hash offset keeps it monotonic without
-        a global ordering pass."""
-        from goose_spark.streaming.ledger import next_seq
-
+        sweep can touch an unbounded dead set — never collect it)."""
         doomed = (
             self.state()
             .filter((F.col("status") == STATUS_DEAD) & (F.col("died_at") < F.lit(cutoff)))
             .withColumn("status", F.lit("deleted"))
-            .withColumn(
-                "seq",
-                F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
-            )
+            .withColumn("seq", transition_seq())
         )
         _, n = self.ledger.append_df(doomed)
         return n

@@ -102,6 +102,39 @@ def next_seq() -> int:
     return time.time_ns() + next(_seq_tiebreak)
 
 
+def transition_seq():
+    """The ``seq`` column for transition rows that Spark writes in bulk
+    (in-progress stamps, purge and retention tombstones). A row's seq
+    only needs to exceed its job's previous one, so a fresh time base
+    plus a per-id hash offset keeps it monotonic without a global
+    ordering pass."""
+    return F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000))
+
+
+def source_log_entries(path: str) -> list[tuple[int, str]] | None:
+    """``(batchId, local path)`` of every entry in one file of a Spark
+    file-source log (``<checkpoint>/sources/0/<batchId>`` or a
+    ``<batchId>.compact`` fold, which also carries the earlier batches'
+    entries). Spark records each path as a URL-encoded URI; the path is
+    returned decoded. None when the file is missing, torn or
+    unreadable."""
+    import json as _json
+    from urllib.parse import unquote, urlparse
+
+    out = []
+    try:
+        with open(path) as fh:
+            for line in fh:
+                line = line.strip()
+                if not line or line.startswith("v"):
+                    continue  # the "v1" version header
+                entry = _json.loads(line)
+                out.append((entry["batchId"], unquote(urlparse(entry["path"]).path)))
+    except (OSError, ValueError, KeyError):
+        return None
+    return out
+
+
 def _tmp_path(directory: str) -> str:
     """The one temp name every ledger file is staged under before its
     atomic rename. Dot-prefixed, so no directory reader (``_parquet_files``
@@ -148,9 +181,6 @@ def _stream_committed_files(checkpoint: str) -> set[str] | None:
     ``commits/<batchId>``) — the same metadata the source itself replays
     on restart, so a file listed here is durably part of a finished
     micro-batch and safe to fold out of the directory."""
-    import json as _json
-    from urllib.parse import unquote, urlparse
-
     commits = os.path.join(checkpoint, "commits")
     sources = os.path.join(checkpoint, "sources", "0")
     try:
@@ -173,16 +203,10 @@ def _stream_committed_files(checkpoint: str) -> set[str] | None:
     for f in batch_files:
         if int(f.split(".")[0]) > last:
             continue
-        try:
-            with open(os.path.join(sources, f)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue  # the "v1" version header
-                    p = _json.loads(line).get("path", "")
-                    out.add(os.path.basename(unquote(urlparse(p).path)))
-        except (OSError, ValueError):
+        entries = source_log_entries(os.path.join(sources, f))
+        if entries is None:
             return None  # torn/unreadable source log — fold nothing
+        out.update(os.path.basename(p) for _, p in entries)
     return out
 
 
@@ -732,21 +756,17 @@ class Ledger:
     #: tombstones carry the superseded row's seq instead
     TOMB_ALL = 1 << 62
 
-    def add_tombstones(self, job_ids: list[str], max_seq: int | None = None) -> None:
-        """``max_seq=None`` → full delete (suppress the job entirely).
-        An explicit max_seq records a SUPERSESSION: only rows with
-        ``seq <= max_seq`` are suppressed — the re-emit analog of
+    def add_tombstones(self, job_ids: list[str]) -> None:
+        """Full delete: suppress every row of each job."""
+        self.add_supersessions([(j, self.TOMB_ALL) for j in job_ids])
+
+    def add_supersessions(self, pairs: list[tuple[str, int]]) -> None:
+        """Record ``(id, max_seq)`` SUPERSESSIONS: only the job's rows
+        with ``seq <= max_seq`` are suppressed — the re-emit analog of
         goose's atomic LREM+RPUSH (commands.clj:145-164), where the
         original list element vanishes the instant the front copy
         appears. Without it, prioritising a not-yet-consumed enqueued
         job would execute both the original and the re-emitted row."""
-        if not job_ids:
-            return
-        self.add_supersessions(
-            [(j, self.TOMB_ALL if max_seq is None else max_seq) for j in job_ids]
-        )
-
-    def add_supersessions(self, pairs: list[tuple[str, int]]) -> None:
         if not pairs:
             return
         table = pa.Table.from_pydict(
@@ -938,9 +958,8 @@ class Ledger:
             return None, consumed, False
         return pa.concat_tables(chosen, promote_options="default"), consumed, more
 
-    def read_scheduled(self, files: list[str] | None = None) -> pa.Table | None:
-        if files is None:
-            files = self.scheduled_files()
+    def read_scheduled(self) -> pa.Table | None:
+        files = self.scheduled_files()
         if not files:
             return None
         return pa.concat_tables([pq.read_table(f) for f in files], promote_options="default")

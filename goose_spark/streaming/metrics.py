@@ -121,13 +121,6 @@ class Metrics:
 
     # -- worker feed (record-metrics parity, metrics.clj:59-86) ----------
 
-    def record_outcomes(self, statuses: list[str], wall_ms: float) -> None:
-        """Feed from a micro-batch's outcome rows."""
-        counts: dict[str, int] = {}
-        for s in statuses:
-            counts[s] = counts.get(s, 0) + 1
-        self.record_outcome_counts(counts, wall_ms)
-
     def record_outcome_counts(self, status_counts: dict[str, int], wall_ms: float) -> None:
         """Count-shaped feed (the distributed-commit path already has
         (status → n) aggregates; expanding them to a per-row list would

@@ -54,7 +54,13 @@ from goose_spark.schema import (
     STATUS_SUCCESS,
     batch_status,
 )
-from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
+from goose_spark.streaming.ledger import (
+    ARROW_LOG_SCHEMA,
+    Ledger,
+    next_seq,
+    source_log_entries,
+    transition_seq,
+)
 from goose_spark.streaming.metrics import latency_classes_ms
 
 
@@ -262,12 +268,10 @@ class Worker:
     """Consumes the ledger log; executes; appends transition rows.
 
     ``process_available()`` = one availableNow streaming pass (tests,
-    drain-then-stop). ``run_loop()`` = repeated passes + timer ticks,
-    goose's long-poll loop shape (consumer.clj:12-21)."""
+    drain-then-stop); ``start()`` = continuous mode."""
 
     def __init__(self, spark: SparkSession, ledger: Ledger | str,
                  worker_id: str = "worker-1",
-                 rand_int: Callable[[int], int] | None = None,
                  retry_delay_fn: Callable[[int], int] | None = None,
                  metrics=None, middlewares: tuple = (),
                  emit_in_progress: bool = False,
@@ -328,8 +332,6 @@ class Worker:
         # its single MULTI txn, batch.clj). RLock: _execute_and_log runs
         # under it from both the stream path and the sweep path.
         self._lock = threading.RLock()
-        if retry_delay_fn is None and rand_int is not None:
-            retry_delay_fn = lambda n: default_retry_delay_sec(n, rand_int)  # noqa: E731
         self.retry_delay_fn = retry_delay_fn
         # Pluggable metrics backend (streaming/metrics.py Metrics
         # protocol — goose's metrics-plugin, metrics.clj:35-42); None
@@ -367,14 +369,6 @@ class Worker:
         )
         query.awaitTermination()
         self.tick()
-
-    def run_loop(self, passes: int, sleep_sec: float = 0.0) -> None:
-        import time as _t
-
-        for _ in range(passes):
-            self.process_available()
-            if sleep_sec:
-                _t.sleep(sleep_sec)
 
     def start(self, trigger_sec: float = 0.25,
               compact_log_every_sec: float | None = None,
@@ -486,36 +480,20 @@ class Worker:
         empty on streaming batch frames). None = couldn't tell cheaply
         (no log entry, non-local files, too many files) → caller takes
         the fully distributed path."""
-        from urllib.parse import urlparse
-
         src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
         path = os.path.join(src_dir, str(epoch_id))
         if not os.path.exists(path):
-            path = os.path.join(src_dir, f"{epoch_id}.compact")
-            if not os.path.exists(path):
-                return None
-        files = []
-        try:
-            with open(path) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line or line.startswith("v"):
-                        continue
-                    entry = json.loads(line)
-                    # compacted logs carry ALL prior batches' entries
-                    if entry.get("batchId") == epoch_id:
-                        files.append(entry["path"])
-        except (OSError, ValueError, KeyError):
+            path += ".compact"
+        entries = source_log_entries(path)
+        if entries is None:
             return None
+        files = [p for b, p in entries if b == epoch_id]
         if len(files) > 256:
             return None  # that many append txns is a big batch anyway
         n = 0
-        for uri in files:
-            parsed = urlparse(uri)
-            if parsed.scheme not in ("", "file"):
-                return None
+        for f in files:
             try:
-                n += pq.ParquetFile(parsed.path or uri).metadata.num_rows
+                n += pq.ParquetFile(f).metadata.num_rows
             except OSError:
                 return None
         return n
@@ -635,16 +613,12 @@ class Worker:
         exec_start = time.perf_counter()
         if self.emit_in_progress:
             # in-progress stamp, committed the same way as the outcome;
-            # its seq (fresh time base + per-id hash offset) stays below
-            # the outcome row's later time base, so the outcome remains
-            # the job's latest row
+            # its seq stays below the outcome row's later time base, so
+            # the outcome remains the job's latest row
             marked = (
                 ordered.withColumn("status", F.lit(STATUS_IN_PROGRESS))
                 .withColumn("worker_id", F.lit(self.worker_id))
-                .withColumn(
-                    "seq",
-                    F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
-                )
+                .withColumn("seq", transition_seq())
             )
             if small:
                 self.ledger.append_table(_to_arrow(marked))
@@ -804,8 +778,9 @@ class Worker:
             return more
         due_mask = pdf["run_at"] <= pd.Timestamp(self._now())
         due, remaining = pdf[due_mask], pdf[~due_mask]
-        self.ledger.replace_scheduled(_to_arrow(remaining) if len(remaining) else None, files)
+        remaining = _to_arrow(remaining) if len(remaining) else None
         if len(due) == 0:
+            self.ledger.replace_scheduled(remaining, files)
             return more
         # due jobs jump the queue (front-enqueue parity, commands.clj:145-160)
         due = due.copy()
@@ -825,6 +800,11 @@ class Worker:
             theirs["seq"] = [base + i for i in range(len(theirs))]
             self.ledger.append_table(_to_arrow(theirs))
         self._execute_frame(due[mask])
+        # the popped files go only after the due rows' outcome is
+        # committed: a crash or a failed execute before this line leaves
+        # them parked for the next tick, and a crash after the commit
+        # leaves rows the latest-seq guard above drops as stale
+        self.ledger.replace_scheduled(remaining, files)
         return more
 
     # ------------------------------------------------------------------

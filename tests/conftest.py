@@ -37,11 +37,3 @@ def oracle():
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
-
-
-@pytest.fixture(scope="session")
-def spark_prop(spark):
-    """Alias fixture so hypothesis @given tests can take the session
-    SparkSession without tripping the function-scoped-fixture health
-    check (the session is immutable across examples)."""
-    return spark

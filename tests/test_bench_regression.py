@@ -258,3 +258,19 @@ def test_cache_miss_lock_is_reentrant():
         return get_or_compute(inner, _Spark(), "i", lambda: 42, label="in")
 
     assert get_or_compute(outer, _Spark(), "o", build_outer, label="out") == 42
+
+
+def test_snapshot_pick_is_newest_round_then_name(tmp_path, monkeypatch):
+    """bench.py's outlier reference and the regression gate pick the
+    same snapshot: the highest round, then the last name within it —
+    r15_final3, not r14 (whose bare-number name an older bench.py rule
+    alone could parse)."""
+    import bench
+    import tools.bench_regression as br
+
+    for name, sec in [("r9", 9.0), ("r14", 14.0), ("r15_baseline", 15.0),
+                      ("r15_final", 15.1), ("r15_final3", 15.3), ("r15_final2", 15.2)]:
+        (tmp_path / f"bench_full_{name}.json").write_text(json.dumps({"queries": {"q": sec}}))
+    monkeypatch.setattr(br, "HISTORY_DIR", str(tmp_path))
+    assert br.newest_snapshot() == str(tmp_path / "bench_full_r15_final3.json")
+    assert bench.load_snapshot() == {"q": 15.3}

@@ -11,6 +11,7 @@ from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
 from goose_spark.console import Console
 from goose_spark.console_html import ConsoleHtml, h, serve
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.streaming.worker import Worker
 
 
@@ -23,7 +24,7 @@ def site(spark, tmp_path_factory):
     client.perform_async("always-fail", max_retries=0)
     client.perform_in_sec(3600, "noop")
     client.perform_every("nightly", "30 2 * * *", "noop")
-    worker = Worker(spark, root, worker_id="html-worker", rand_int=lambda n: 0)
+    worker = Worker(spark, root, worker_id="html-worker", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()  # fail-job dies; noops succeed
     return ConsoleHtml(Console(LedgerAPI(spark, root)))
 
@@ -114,7 +115,7 @@ def test_post_actions_roundtrip(spark, tmp_path):
                             action="delete", ids=doomed["id"])
         assert status == 200 and body == "deleted 1"
 
-        worker = Worker(spark, root, rand_int=lambda n: 0)
+        worker = Worker(spark, root, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
         worker.process_available()
         assert worker.executions == 1  # the fail job; deleted one skipped
 
@@ -181,7 +182,7 @@ def test_post_prioritise_purge_and_cron_delete(spark, tmp_path):
 
         from goose_spark.streaming.worker import Worker
 
-        worker = Worker(spark, root, rand_int=lambda n: 0)
+        worker = Worker(spark, root, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
         worker.process_available()
         # purged jobs never executed: 2 default noops + 1 fail
         assert worker.executions == 3

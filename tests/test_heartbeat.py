@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
 from goose_spark.console import Console
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.streaming.heartbeat import _SCHEMA, ProcessRegistry
 from goose_spark.streaming.worker import Worker
 
@@ -53,7 +54,7 @@ def test_worker_lifecycle_registers_and_beats(spark, tmp_path):
     root = str(tmp_path / "ledger")
     client = JobClient(root)
     client.perform_async("noop")
-    worker = Worker(spark, root, worker_id="beat-worker", rand_int=lambda n: 0)
+    worker = Worker(spark, root, worker_id="beat-worker", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     api = LedgerAPI(spark, root)
     assert [w["worker_id"] for w in api.workers()] == ["beat-worker"]
 
@@ -70,7 +71,7 @@ def test_worker_lifecycle_registers_and_beats(spark, tmp_path):
 def test_continuous_stop_deregisters(spark, tmp_path):
     root = str(tmp_path / "ledger")
     JobClient(root).perform_async("noop")
-    worker = Worker(spark, root, worker_id="cont-worker", rand_int=lambda n: 0)
+    worker = Worker(spark, root, worker_id="cont-worker", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     handle = worker.start(trigger_sec=0.5)
     try:
         assert worker.registry.alive("cont-worker")

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.streaming.ledger import (
     ARROW_BATCH_SCHEMA,
     ARROW_CRON_SCHEMA,
@@ -61,7 +62,7 @@ def test_staged_temp_files_are_invisible(spark, tmp_path):
         "max_seq": pa.array([Ledger.TOMB_ALL], type=pa.int64()),
     }))
 
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()  # runs the batch, parks the scheduled job
 
     # the parked row made due in a staged copy: read, it would run early
@@ -87,7 +88,7 @@ def test_one_schema_per_file_kind(spark, tmp_path):
     ledger = Ledger(str(tmp_path / "ledger"))
     client = JobClient(ledger)
     frozen = utcnow() + timedelta(minutes=2)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, now_fn=lambda: frozen)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=lambda: frozen)
 
     client.perform_every("every-minute", "* * * * *", "noop")
     assert pq.read_schema(ledger.cron_path) == ARROW_CRON_SCHEMA

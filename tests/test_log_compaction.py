@@ -13,6 +13,7 @@ import os
 import pytest
 
 from goose_spark.client import JobClient
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.functions.registry import reset_flaky
 from goose_spark.streaming.ledger import Ledger, _stream_committed_files
 from goose_spark.streaming.worker import Worker
@@ -50,7 +51,7 @@ def test_fold_is_transparent_to_running_worker(spark, ledger):
     client = JobClient(ledger)
     for i in range(30):  # 30 separate appends → 30 raw log files
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert worker.executions == 30
 
@@ -88,7 +89,7 @@ def test_fold_touches_only_committed_files(spark, ledger):
     client = JobClient(ledger)
     for i in range(20):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     for i in range(5):  # uncommitted tail
@@ -124,7 +125,7 @@ def test_fold_respects_every_listed_checkpoint(spark, ledger, tmp_path):
     client = JobClient(ledger)
     for i in range(12):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     # the other consumer commits the first 12 jobs' files
@@ -157,7 +158,7 @@ def test_time_travel_survives_fold(spark, ledger):
     client = JobClient(ledger)
     for i in range(10):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     cursor = ledger.mark()
     want = sorted(
@@ -182,7 +183,7 @@ def test_torn_fold_finishes_deletes_on_reopen(spark, ledger, monkeypatch):
     client = JobClient(ledger)
     for i in range(8):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     real_apply = Ledger._apply_manifest
@@ -213,7 +214,7 @@ def test_fold_noop_below_min_files(spark, ledger):
     client = JobClient(ledger)
     for i in range(3):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     stats = ledger.compact_log(spark, [worker.checkpoint_dir],
                                min_files=1000, keep_recent=0)
@@ -225,7 +226,7 @@ def test_committed_files_reader_handles_sparks_own_log_compaction(spark, ledger)
     into <id>.compact; _stream_committed_files must still see the early
     files (they only exist inside the .compact entry after that)."""
     client = JobClient(ledger)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     for i in range(12):  # > fileSource.log.compactInterval (10)
         client.perform_async("noop", i)
         worker.process_available()
@@ -317,7 +318,7 @@ def test_live_fold_serializes_with_the_micro_batch_lock(spark, ledger):
     client = JobClient(ledger)
     for i in range(40):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     folds: list[dict] = []
@@ -449,7 +450,7 @@ def test_fold_build_runs_outside_the_publish_lock(spark, ledger):
     client = JobClient(ledger)
     for i in range(30):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     events: list[str] = []

@@ -1,13 +1,9 @@
-"""Plan-quality regression tests (the perf-pass checks, codified) and
-source/sink round-trips."""
+"""Plan-quality regression tests (the perf-pass checks, codified)."""
 
 from __future__ import annotations
 
-import pytest
-
 from goose_spark.plans.inspect import report
 from goose_spark.queries import load_all
-from goose_spark.sources import io as gio
 from tests.conftest import SF_CORRECT
 
 REGISTRY = load_all()
@@ -141,66 +137,6 @@ def test_moment_stats_no_window(spark):
     r = report(REGISTRY["q50_moment_stats"].builder(spark, SF_CORRECT))
     assert r.single_partition_exchanges == 0
     assert "Window" not in r.text
-
-
-# --- sources / sinks ---------------------------------------------------------
-
-def test_parquet_roundtrip_partitioned(spark, tmp_path):
-    df = REGISTRY["q20_distinct_topk"].builder(spark, SF_CORRECT)
-    path = str(tmp_path / "out")
-    gio.save(df, path, partition_by=None, mode="overwrite")
-    back = gio.load(spark, path)
-    assert sorted(r["p_type"] for r in back.collect()) == sorted(
-        r["p_type"] for r in df.collect()
-    )
-
-
-def test_csv_json_roundtrip(spark, tmp_path):
-    from goose_spark.queries.base import t
-
-    src = t(spark, SF_CORRECT, "nation")
-    for fmt in ("csv", "json"):
-        path = str(tmp_path / fmt)
-        gio.save(src, path, fmt=fmt, mode="overwrite")
-        back = gio.load(spark, path, fmt=fmt, schema=src.schema)
-        assert back.count() == src.count()
-        assert sorted(back.columns) == sorted(src.columns)
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from goose_spark.queries.base import t
-
-    src = t(spark, SF_CORRECT, "customer")
-    path = str(tmp_path / "part")
-    gio.save(src, path, partition_by=["c_mktsegment"], mode="overwrite")
-    back = gio.load(spark, path).filter(F.col("c_mktsegment") == "BUILDING")
-    r = report(back)
-    # partition filter must NOT appear as a data filter — it prunes dirs
-    assert "PartitionFilters: [isnotnull(c_mktsegment" in r.text
-    assert back.count() == src.filter(F.col("c_mktsegment") == "BUILDING").count()
-
-
-def test_unsupported_format_rejected(spark):
-    with pytest.raises(ValueError):
-        gio.load(spark, "/tmp/x", fmt="avro")
-
-
-def test_stream_load_requires_schema_and_runs(spark, tmp_path):
-    from goose_spark.queries.base import t
-
-    src = t(spark, SF_CORRECT, "region")
-    path = str(tmp_path / "stream-src")
-    src.write.parquet(path)
-    stream = gio.load_stream(spark, path, src.schema)
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory").queryName("io_stream")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    assert spark.sql("SELECT count(*) n FROM io_stream").collect()[0]["n"] == src.count()
 
 
 def test_tfidf_topk_plan(spark):
@@ -417,40 +353,6 @@ def test_activity_islands_shares_user_exchange(spark):
     # window + run agg both key on user_id; no unpartitioned window
     assert "Window" in r.text
     assert r.single_partition_exchanges <= 1  # the final scalar summary
-
-
-def test_jsonl_quarantine_splits_good_bad(spark, tmp_path):
-    """Ingestion front door: malformed JSON lines land in quarantine
-    as 'unparseable', parsed rows missing a required field land as
-    'missing:<field>', and not one input line is silently dropped."""
-    from pyspark.sql import types as T
-
-    from goose_spark.sources.io import load_jsonl_quarantined
-
-    p = tmp_path / "feed.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "alpha"}\n'
-        '{"doc_id": 2, "text": "bravo"}\n'
-        '{"doc_id": 3 "text": "broken syntax"}\n'            # unparseable
-        '{"doc_id": 4, "source": "crawl9"}\n'                # missing text
-        '\n'                                                  # blank: not data
-        '{"doc_id": 5, "text": "charlie"}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    good, bad = load_jsonl_quarantined(spark, str(p), schema)
-    assert sorted(r["doc_id"] for r in good.collect()) == [1, 2, 5]
-    q = {(r["reason"]): r["raw"] for r in bad.collect()}
-    assert set(q) == {"unparseable", "missing:text"}
-    assert "broken syntax" in q["unparseable"]
-    # the quarantined raw is the ORIGINAL line — extra fields outside
-    # the declared schema survive for replay after a contract fix
-    assert '"source": "crawl9"' in q["missing:text"]
-    assert good.count() + bad.count() == 5  # blank line is not data
 
 
 def test_plans_md_single_partitions_all_annotated():

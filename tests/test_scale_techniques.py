@@ -1,81 +1,10 @@
-"""Bucketed co-located joins and salted skew joins — the two explicit
-shuffle-management techniques of the 100 TB design (SCALE.md), verified
-for both plan shape and result parity."""
+"""The at-scale paths of the 100 TB design (SCALE.md) — iterative
+components, two-pass packing and quantile buckets — checked against
+their single-task forms."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from goose_spark.operators.skew import salted_join
-from goose_spark.plans.inspect import report
-from goose_spark.sources.bucketing import bucketed_join, write_bucketed
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def bucket_db(spark, tmp_path_factory):
-    loc = tmp_path_factory.mktemp("bucket-warehouse")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS buckets LOCATION '{loc}'")
-    yield "buckets"
-    spark.sql("DROP DATABASE IF EXISTS buckets CASCADE")
-
-
-def test_bucketed_join_is_shuffle_free(spark, bucket_db):
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "buckets.b_orders", "o_orderkey", n_buckets=4)
-    write_bucketed(lineitem, "buckets.b_lineitem", "o_orderkey", n_buckets=4)
-
-    # at test scale Spark would broadcast (which bypasses bucketing
-    # entirely); disable it to surface the co-located SMJ the technique
-    # exists for at fact⋈fact scale
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(
-            spark, "buckets.b_orders", "buckets.b_lineitem", "o_orderkey"
-        )
-        r = report(joined)
-        # co-located: SortMergeJoin with NO exchange on either side
-        assert r.sort_merge_joins == 1, r.text
-        assert r.shuffles == 0, r.text
-        assert "Bucketed: true" in r.text, r.text
-        # and it still computes the right thing
-        expect = orders.join(lineitem, "o_orderkey").count()
-        assert joined.count() == expect
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_salted_join_matches_plain_join(spark):
-    # heavily skewed fact: 90% of rows share one hot key
-    fact = spark.range(0, 5000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.range(0, 50).select(F.col("id").alias("k"), (F.col("id") * 100).alias("w"))
-
-    salted = salted_join(fact, dim, "k", n_salts=8)
-    plain = fact.join(dim, "k")
-
-    assert salted.count() == plain.count()
-    assert sorted(salted.columns) == sorted(plain.columns)
-    s = sorted(tuple(r) for r in salted.select("k", "v", "w").collect())
-    p = sorted(tuple(r) for r in plain.select("k", "v", "w").collect())
-    assert s == p
-
-
-def test_salted_join_left_outer_keeps_unmatched(spark):
-    fact = spark.range(0, 100).select((F.col("id") % 60).alias("k"), F.col("id").alias("v"))
-    dim = spark.range(0, 50).select(F.col("id").alias("k"), F.lit("x").alias("w"))
-    salted = salted_join(fact, dim, "k", n_salts=4, how="left")
-    plain = fact.join(dim, "k", "left")
-    s = sorted(tuple(r) for r in salted.select("k", "v", "w").collect())
-    p = sorted(tuple(r) for r in plain.select("k", "v", "w").collect())
-    assert s == p
 
 
 def test_dd6_iterative_path_matches_fast_path(spark, monkeypatch):

@@ -12,6 +12,7 @@ import pytest
 
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.functions.registry import reset_flaky
 from goose_spark.streaming.ledger import Ledger
 from goose_spark.streaming.worker import Worker
@@ -41,7 +42,7 @@ def test_async_execution(spark, ledger):
     client = JobClient(ledger)
     for i in range(100):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert counts(spark, ledger) == {"success": 100}
     assert worker.executions == 100
@@ -52,7 +53,7 @@ def test_async_execution(spark, ledger):
 def test_no_duplicate_execution_across_passes(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("noop")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     worker.process_available()  # nothing new → nothing executed
     assert worker.executions == 1
@@ -65,7 +66,7 @@ def test_retry_then_success(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("flaky", "job-a", 2, max_retries=5)
     # zero jitter → delay = 20 + n⁴ sec; we shrink it by parking manually:
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     st = counts(spark, ledger)
     assert st == {"retrying": 1}
@@ -100,7 +101,7 @@ def test_retry_then_success(spark, ledger):
 def test_death_after_max_retries(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("always-fail", max_retries=2)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
 
     import pyarrow as pa
@@ -129,7 +130,7 @@ def test_death_after_max_retries(spark, ledger):
 def test_scheduled_job_not_due_then_due(spark, ledger):
     client = JobClient(ledger)
     client.perform_at(utcnow() + timedelta(hours=1), "noop")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert counts(spark, ledger) == {"scheduled": 1}  # parked, not run
 
@@ -145,7 +146,7 @@ def test_batch_success_callback(spark, ledger):
     client = JobClient(ledger)
     res = client.perform_batch("noop", [(i,) for i in range(10)],
                                callback_fn="noop", queue="batch-q")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     worker.process_available()  # second pass runs the callback job
 
@@ -166,7 +167,7 @@ def test_batch_partial_success(spark, ledger):
     client = JobClient(ledger)
     res = client.perform_batch("flaky", [("k1", 0), ("k2", 99)],
                                callback_fn="noop", queue="batch-q", max_retries=0)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     batches = worker.ledger.batches_state()
     assert batches[res["id"]]["status"] == "partial-success"
@@ -180,8 +181,7 @@ def test_batch_member_death_respects_skip_dead_queue(spark, ledger):
     client = JobClient(ledger)
     res = client.perform_batch("flaky", [("sk1", 0), ("sk2", 99)],
                                callback_fn="noop", max_retries=0)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0,
-                    retry_delay_fn=lambda n: 0, skip_dead_queue=True)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: 0, skip_dead_queue=True)
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     assert api.peek_dead(5) == []                       # off dead surfaces
@@ -204,7 +204,7 @@ def test_cron_tick_materializes_job(spark, ledger):
     from goose_spark.functions import cron as cronlib
 
     frozen = (utcnow() + timedelta(minutes=10)).replace(second=0, microsecond=0)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, now_fn=lambda: frozen)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=lambda: frozen)
     worker.tick()            # materialize due cron job
     worker.process_available()  # consume + execute it
     from pyspark.sql import functions as F
@@ -233,7 +233,7 @@ def test_cron_registration_overwrite(spark, ledger):
 def test_replay_dead_and_retention(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("always-fail", max_retries=0)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     assert api.dashboard_counts() == {"dead": 1}
@@ -275,7 +275,7 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
         client.perform_async("noop", i)
     for i in range(50):
         client.perform_async("noop", 1000 + i, priority=PRIORITY_FRONT)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(recorder,))
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), middlewares=(recorder,))
     worker.process_available()
 
     # reconstruct per-partition execution order; priorities must be
@@ -300,7 +300,7 @@ def test_in_progress_visibility_and_crash_window(spark, ledger, tmp_path):
     client = JobClient(ledger)
     for i in range(5):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, emit_in_progress=True)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), emit_in_progress=True)
     snapshot = str(tmp_path / "ck-snap")
     shutil.copytree(ledger.checkpoint_dir, snapshot)
     worker.process_available()
@@ -322,7 +322,7 @@ def test_prioritise_execution_moves_scheduled_to_front(spark, ledger):
     LREM+RPUSH / ZREM+RPUSH, commands.clj:145-164)."""
     client = JobClient(ledger)
     res = client.perform_at(utcnow() + timedelta(hours=2), "noop")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     assert api.dashboard_counts() == {"scheduled": 1}
@@ -344,7 +344,7 @@ def test_prioritise_execution_skips_missing_and_ineligible(spark, ledger):
     client = JobClient(ledger)
     sched = client.perform_at(utcnow() + timedelta(hours=2), "noop")
     done = client.perform_async("noop")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()  # `done` executes; `sched` parks
 
     api = LedgerAPI(spark, ledger)
@@ -370,7 +370,7 @@ def test_crash_replay_at_least_once_state_converges(spark, ledger, tmp_path):
     client = JobClient(ledger)
     for i in range(10):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
 
     snapshot = str(tmp_path / "ck-snapshot")
     shutil.copytree(ledger.checkpoint_dir, snapshot)
@@ -405,7 +405,7 @@ def test_effect_once_under_crash_replay(spark, ledger, tmp_path):
     client = JobClient(ledger)
     for i in range(5):
         client.perform_async("effect-once-append", table, out, f"eff-{i}", f"payload-{i}")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
 
     snapshot = str(tmp_path / "ck-snapshot")
     shutil.copytree(ledger.checkpoint_dir, snapshot)
@@ -504,7 +504,7 @@ def test_ledger_compaction(spark, ledger):
     client = JobClient(ledger)
     for i in range(20):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     # 20 enqueue files + outcome file(s) → history rows = 40
     assert ledger.log(spark).count() == 40
@@ -527,7 +527,7 @@ def test_per_batch_linger_compaction(spark, ledger):
     client = JobClient(ledger)
     short = client.perform_batch("noop", [(1,), (2,)], linger_sec=0)
     longb = client.perform_batch("noop", [(3,), (4,)], linger_sec=86400)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     batches = ledger.batches_state()
     assert batches[short["id"]]["status"] == "success"
@@ -562,7 +562,7 @@ def test_crash_recovery_replays_unacked_batch(spark, ledger, monkeypatch):
     # this test exercises its torn-staging recovery specifically; the
     # small-batch driver commit has its own crash test below
     monkeypatch.setattr("goose_spark.streaming.worker.SMALL_BATCH_ROWS", 0)
-    w1 = Worker(spark, ledger, worker_id="w-crash", rand_int=lambda n: 0)
+    w1 = Worker(spark, ledger, worker_id="w-crash", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     orig_append = ledger.append_df
 
     def dying_append(df):
@@ -585,7 +585,7 @@ def test_crash_recovery_replays_unacked_batch(spark, ledger, monkeypatch):
 
     # restart (same checkpoint = the preservation queue): the unacked
     # micro-batch replays, exactly once
-    w2 = Worker(spark, ledger, worker_id="w-recovered", rand_int=lambda n: 0)
+    w2 = Worker(spark, ledger, worker_id="w-recovered", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     w2.process_available()
     assert w2.executions == 5
     assert counts(spark, ledger) == {"success": 5}
@@ -611,7 +611,7 @@ def test_crash_recovery_small_batch_path(spark, ledger):
     for i in range(5):
         client.perform_async("noop", i)
 
-    w1 = Worker(spark, ledger, worker_id="w-crash-s", rand_int=lambda n: 0)
+    w1 = Worker(spark, ledger, worker_id="w-crash-s", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     orig = Ledger.append_table
 
     def dying_append(self, table):
@@ -625,17 +625,15 @@ def test_crash_recovery_small_batch_path(spark, ledger):
         Ledger.append_table = orig
 
     assert counts(spark, ledger) == {"enqueued": 5}  # nothing published
-    w2 = Worker(spark, ledger, worker_id="w-recovered-s", rand_int=lambda n: 0)
+    w2 = Worker(spark, ledger, worker_id="w-recovered-s", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     w2.process_available()
     assert w2.executions == 5
     assert counts(spark, ledger) == {"success": 5}
 
 
-def test_small_batch_routing(spark, ledger, monkeypatch):
-    """Micro-batches at or under SMALL_BATCH_ROWS take the driver-
-    compacted path; bigger ones keep the fully distributed path. The
-    row estimate comes from the streaming source log + parquet footers
-    (no Spark job)."""
+@pytest.fixture()
+def small_path_calls(monkeypatch):
+    """One entry per micro-batch that took the small (driver-frame) path."""
     calls = []
     orig = Worker._execute_frame
 
@@ -644,11 +642,19 @@ def test_small_batch_routing(spark, ledger, monkeypatch):
         return orig(self, pdf)
 
     monkeypatch.setattr(Worker, "_execute_frame", spy)
+    return calls
 
+
+def test_small_batch_routing(spark, ledger, monkeypatch, small_path_calls):
+    """Micro-batches at or under SMALL_BATCH_ROWS take the driver-
+    compacted path; bigger ones keep the fully distributed path. The
+    row estimate comes from the streaming source log + parquet footers
+    (no Spark job)."""
+    calls = small_path_calls
     client = JobClient(ledger)
     for i in range(20):
         client.perform_async("noop", i)
-    Worker(spark, ledger, rand_int=lambda n: 0).process_available()
+    Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0)).process_available()
     assert calls == [True]  # 20 rows ≤ 10k default → small path
     assert counts(spark, ledger) == {"success": 20}
 
@@ -656,9 +662,21 @@ def test_small_batch_routing(spark, ledger, monkeypatch):
     for i in range(20):
         client.perform_async("noop", 100 + i)
     monkeypatch.setattr("goose_spark.streaming.worker.SMALL_BATCH_ROWS", 5)
-    Worker(spark, ledger, rand_int=lambda n: 0).process_available()
+    Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0)).process_available()
     assert calls == []  # 20 rows > 5 → distributed path
     assert counts(spark, ledger) == {"success": 40}
+
+
+def test_small_batch_routing_root_with_space(spark, tmp_path, small_path_calls):
+    """The source log records URL-encoded paths; the row estimate
+    decodes them, so a ledger root with a space keeps the small path."""
+    ledger = Ledger(str(tmp_path / "ledger with space"))
+    client = JobClient(ledger)
+    for i in range(3):
+        client.perform_async("noop", i)
+    Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0)).process_available()
+    assert small_path_calls == [True]
+    assert counts(spark, ledger) == {"success": 3}
 
 
 def test_torn_commit_rolls_forward(spark, ledger):
@@ -734,7 +752,7 @@ def test_scheduled_store_hour_bucket_prune(spark, ledger):
     client = JobClient(ledger)
     client.perform_at(utcnow() + timedelta(hours=3), "noop")
     client.perform_async("noop")
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()  # parks the scheduled row, runs the async one
 
     names = [os.path.basename(f) for f in ledger.scheduled_files()]
@@ -746,6 +764,68 @@ def test_scheduled_store_hour_bucket_prune(spark, ledger):
     # sweep with nothing due leaves the future bucket untouched on disk
     worker.tick()
     assert [os.path.basename(f) for f in ledger.scheduled_files()] == names
+
+
+def _park_one_due_later(spark, ledger):
+    """Park one job due in 60 s; return its id and a clock 120 s ahead."""
+    res = JobClient(ledger).perform_at(utcnow() + timedelta(seconds=60), "noop")
+    Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0)).process_available()
+    assert counts(spark, ledger) == {"scheduled": 1}
+    return res["id"], lambda: utcnow() + timedelta(seconds=120)
+
+
+def test_sweep_keeps_parked_job_when_execute_fails(spark, ledger):
+    """The due sweep removes a job's parked file only after the job's
+    outcome is committed: an execute that raises inside the sweep
+    leaves the job parked, and a restarted worker runs it once."""
+    _, later = _park_one_due_later(spark, ledger)
+    failing = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=later)
+
+    def boom(pdf):
+        raise RuntimeError("simulated execute failure")
+
+    failing._execute_frame = boom
+    with pytest.raises(RuntimeError):
+        failing.tick()
+
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=later)
+    for _ in range(3):
+        worker.process_available()
+    assert counts(spark, ledger) == {"success": 1}
+    assert worker.executions == 1
+    assert ledger.scheduled_files() == []
+
+
+def test_sweep_crash_after_commit_is_exactly_once(spark, ledger, monkeypatch):
+    """A crash after the sweep's execute committed but before the parked
+    files are swapped leaves stale parked rows; the latest-seq guard
+    drops them, so the job succeeds exactly once."""
+    from pyspark.sql import functions as F
+
+    job_id, later = _park_one_due_later(spark, ledger)
+    crashing = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=later)
+    orig = Ledger.replace_scheduled
+    crashed = []
+
+    def crash_once_after_commit(self, remaining, old_files):
+        if crashing.executions and not crashed:
+            crashed.append(True)
+            raise RuntimeError("simulated crash before the parked-file swap")
+        return orig(self, remaining, old_files)
+
+    monkeypatch.setattr(Ledger, "replace_scheduled", crash_once_after_commit)
+    with pytest.raises(RuntimeError):
+        crashing.tick()
+    assert crashing.executions == 1 and ledger.scheduled_files() != []
+
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0), now_fn=later)
+    for _ in range(2):
+        worker.process_available()
+    success = ledger.log(spark).filter((F.col("id") == job_id) & (F.col("status") == "success"))
+    assert success.count() == 1
+    assert crashing.executions + worker.executions == 1
+    assert counts(spark, ledger) == {"success": 1}
+    assert ledger.scheduled_files() == []
 
 
 # --- delete / purge / pop (api/{enqueued,scheduled,dead}_jobs.clj) ----------
@@ -760,7 +840,7 @@ def test_delete_jobs_prevents_execution(spark, ledger):
     api = LedgerAPI(spark, ledger)
     assert api.delete_jobs([doomed["id"], "missing-id"]) == 1
 
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert worker.executions == 1  # only the kept job ran
     assert api.find_by_id(doomed["id"])["status"] == "deleted"
@@ -775,7 +855,7 @@ def test_delete_batch_members_never_execute(spark, ledger):
     api = LedgerAPI(spark, ledger)
     assert api.delete_batch(res["id"]) == 4
 
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert worker.executions == 0
     assert {api.find_by_id(j)["status"] for j in res["job_ids"]} == {"deleted"}
@@ -792,7 +872,7 @@ def test_purge_queue(spark, ledger):
     api = LedgerAPI(spark, ledger)
     assert api.purge("purge-me") == 5
 
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert worker.executions == 1
     assert api.find_by_id(survivor["id"])["status"] == "success"
@@ -802,7 +882,7 @@ def test_purge_queue(spark, ledger):
 def test_pop_dead_returns_and_deletes(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("always-fail", max_retries=0)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     popped = api.pop_dead(1)
@@ -824,7 +904,7 @@ def test_purge_all_and_get_by_range(spark, ledger):
     assert [j["id"] for j in window] == all_ids[2:5]
 
     # scheduled purge spans scheduled+retrying across queues
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     assert api.purge_scheduled() == 1
     worker.tick()
@@ -845,7 +925,7 @@ def test_queue_scoped_workers(spark, ledger):
     # past-due → immediate front-priority enqueue (S2), still beta-only
     client.perform_at(utcnow() - timedelta(seconds=5), "noop", queue="beta")
 
-    wa = Worker(spark, ledger, worker_id="w-alpha", rand_int=lambda n: 0,
+    wa = Worker(spark, ledger, worker_id="w-alpha", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                 queues=["alpha"])
     wa.process_available()
     assert wa.executions == 3  # only alpha jobs; beta untouched
@@ -853,7 +933,7 @@ def test_queue_scoped_workers(spark, ledger):
     st = api.dashboard_counts()
     assert st["success"] == 3 and st["enqueued"] == 3
 
-    wb = Worker(spark, ledger, worker_id="w-beta", rand_int=lambda n: 0,
+    wb = Worker(spark, ledger, worker_id="w-beta", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                 queues=["beta"])
     wb.process_available()  # consumes the whole log on ITS checkpoint
     assert wb.executions == 3  # 2 async + 1 past-due scheduled
@@ -867,8 +947,8 @@ def test_scheduler_role_single_owner(spark, ledger):
     front-priority enqueued rows, which the scoped worker then consumes)."""
     client = JobClient(ledger)
     client.perform_at(utcnow() + timedelta(hours=1), "noop", queue="alpha")
-    owner = Worker(spark, ledger, worker_id="owner", rand_int=lambda n: 0)
-    scoped = Worker(spark, ledger, worker_id="w-a", rand_int=lambda n: 0,
+    owner = Worker(spark, ledger, worker_id="owner", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
+    scoped = Worker(spark, ledger, worker_id="w-a", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                     queues=["alpha"])
     assert owner.scheduler_role and not scoped.scheduler_role
 
@@ -910,8 +990,8 @@ def test_mixed_topology_no_double_execution(spark, ledger):
     for i in range(3):
         client.perform_async("noop", i, queue="alpha")
     client.perform_async("noop", 99)  # default queue → owner's
-    owner = Worker(spark, ledger, worker_id="owner", rand_int=lambda n: 0)
-    scoped = Worker(spark, ledger, worker_id="w-a", rand_int=lambda n: 0,
+    owner = Worker(spark, ledger, worker_id="owner", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
+    scoped = Worker(spark, ledger, worker_id="w-a", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                     queues=["alpha"])
 
     owner.process_available()
@@ -938,7 +1018,7 @@ def test_scoped_scheduler_reenqueues_other_queues(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("noop", queue="alpha")
     client.perform_at(utcnow() + timedelta(hours=1), "noop", queue="gamma")
-    scoped = Worker(spark, ledger, worker_id="w-a", rand_int=lambda n: 0,
+    scoped = Worker(spark, ledger, worker_id="w-a", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                     queues=["alpha"], scheduler_role=True)
     scoped.process_available()  # executes alpha; parks the gamma schedule
     assert scoped.executions == 1
@@ -957,7 +1037,7 @@ def test_scoped_scheduler_reenqueues_other_queues(spark, ledger):
     st = api.dashboard_counts()
     assert st.get("scheduled", 0) == 0  # no longer parked
     assert st.get("enqueued", 0) >= 1  # gamma came back as an enqueued row
-    gamma = Worker(spark, ledger, worker_id="w-g", rand_int=lambda n: 0,
+    gamma = Worker(spark, ledger, worker_id="w-g", retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0),
                    queues=["gamma"])
     gamma.process_available()
     assert gamma.executions == 1
@@ -986,7 +1066,7 @@ def test_state_as_of_sees_pre_execution_status(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("noop", 1)
     cursor = ledger.mark()
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     assert {r["status"] for r in api.state().collect()} == {"success"}
@@ -1002,7 +1082,7 @@ def test_state_as_of_respects_compaction_horizon(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("noop", 1)
     cursor = ledger.mark()
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     ledger.compact(spark)
     api = LedgerAPI(spark, ledger)
@@ -1040,8 +1120,7 @@ def test_error_and_death_handlers_fire(spark, ledger, tmp_path):
     # first arg (handlers must be module-registered to resolve on
     # executor workers)
     res = client.perform_async("always-fail", log, max_retries=1)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0,
-                    retry_delay_fn=lambda n: 0,
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: 0,
                     error_handler="record-error-handler",
                     death_handler="record-death-handler")
     worker.process_available()   # failure 1 → retrying (error handler)
@@ -1061,8 +1140,7 @@ def test_skip_dead_queue(spark, ledger):
     client = JobClient(ledger)
     client.perform_async("always-fail", max_retries=0)
     client.perform_async("noop", 1)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0,
-                    retry_delay_fn=lambda n: 0, skip_dead_queue=True)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: 0, skip_dead_queue=True)
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     st = api.dashboard_counts()
@@ -1077,8 +1155,7 @@ def test_handler_exception_never_breaks_outcome(spark, ledger):
     # a handler that raises when called must be swallowed executor-side
     # without corrupting the outcome row (an UNRESOLVABLE handler name
     # now fails at Worker construction — see test_specs.py)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0,
-                    retry_delay_fn=lambda n: 0,
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: 0,
                     death_handler="raising-handler")
     worker.process_available()
     api = LedgerAPI(spark, ledger)
@@ -1168,7 +1245,7 @@ def test_large_args_payload_roundtrip(spark, ledger):
     big = "x" * (1 << 20)
     client = JobClient(ledger)
     res = client.perform_async("noop", big, {"nested": [1, 2, 3]})
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.process_available()
     api = LedgerAPI(spark, ledger)
     row = api.find_by_id(res["id"])

@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from goose_spark.api import LedgerAPI
+from goose_spark.functions.backoff import default_retry_delay_sec
 from goose_spark.schema import PRIORITY_BACK, STATUS_SCHEDULED
 from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
 from goose_spark.streaming.worker import Worker
@@ -166,14 +167,14 @@ def test_sweep_massive_backlog_bounded(spark, ledger, monkeypatch):
         pops.append(0 if tbl is None else tbl.num_rows)
         return tbl, files, more
 
-    def no_full_read(self, files=None):
+    def no_full_read(self):
         raise AssertionError("sweep called read_scheduled() — unbounded backlog read")
 
     monkeypatch.setattr(Ledger, "pop_due", spy)
     monkeypatch.setattr(Ledger, "read_scheduled", no_full_read)
 
     monkeypatch.setattr("goose_spark.streaming.worker.SCHEDULE_POP_LIMIT", LIMIT)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker = Worker(spark, ledger, retry_delay_fn=lambda n: default_retry_delay_sec(n, lambda _: 0))
     worker.tick()
 
     assert max(pops) <= LIMIT + Ledger.PARK_ROW_GROUP  # driver-memory cap

@@ -106,8 +106,10 @@ def _round_num(path: str) -> int:
 
 
 def newest_snapshot() -> str | None:
+    """Highest round, then the last name in it (r15_final3 after
+    r15_baseline); bench.py's outlier retries read the same file."""
     paths = glob.glob(os.path.join(HISTORY_DIR, "bench_full_*.json"))
-    return max(paths, key=_round_num) if paths else None
+    return max(paths, key=lambda p: (_round_num(p), os.path.basename(p))) if paths else None
 
 
 def newest_driver_record() -> str | None:

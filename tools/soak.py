@@ -273,7 +273,9 @@ def main() -> None:
         handle.stop()
 
     # drain whatever is left, then final accounting
-    worker.run_loop(3, sleep_sec=2)
+    for _ in range(3):
+        worker.process_available()
+        time.sleep(2)
     counts = api.dashboard_counts()
     summary = {
         "duration_sec": duration,
